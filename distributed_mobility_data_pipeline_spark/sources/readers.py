@@ -80,10 +80,12 @@ def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
 def read_json_log(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
-    """Schema'd JSONL scan (no inference; corrupt lines quarantined)."""
+    """Schema'd JSONL scan (no inference). Malformed lines, such as a
+    torn last line after a crash mid-append, are dropped: PERMISSIVE mode
+    without a corrupt-record column would turn them into all-null rows."""
     return (
         spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
+        .option("mode", "DROPMALFORMED")
         .json(path)
     )
 

@@ -7,6 +7,20 @@ transparently when delta-spark is importable. MERGE (S5) is re-expressed
 as the canonical Spark emulation: target anti-join source on the merge
 keys, union the source, rewrite — idempotent for re-runs with the same
 keys, which is the property batch_scoring.py:161-186 relies on.
+
+Parquet commit protocol. Every parquet table mutation (write_overwrite,
+merge_upsert, apply_cdc_batch, delete_where, optimize_layout) ends in
+``_commit``: it writes the whole new table to ``<path>._tmp_commit``,
+then ``_atomic_replace`` renames ``<path>`` to ``<path>._bak``, the
+staging directory to ``<path>``, and deletes ``._bak``. A crash between
+the two renames leaves no ``<path>`` and the old table at ``._bak``.
+Recovery (``_recover``) runs before every mutation and inside
+``table_exists``: with ``<path>`` missing it renames ``._bak`` back; with
+both present (the swap had finished) it deletes ``._bak``; it deletes a
+leftover staging directory. So a mutation leaves the old table or the
+new one. "No table yet" is an existence check after recovery: a table
+that is there but unreadable raises and is never rewritten from one
+batch. One writer per table at a time.
 """
 
 from __future__ import annotations
@@ -18,6 +32,9 @@ from pyspark.sql import functions as F
 
 from distributed_mobility_data_pipeline_spark.session import has_delta
 
+_STAGING = "._tmp_commit"
+_BAK = "._bak"
+
 
 def _fmt() -> str:
     return "delta" if has_delta() else "parquet"
@@ -28,25 +45,59 @@ def _hadoop_path(spark: SparkSession, path: str):
     return jvm.org.apache.hadoop.fs.Path(path)
 
 
-def _atomic_replace(spark: SparkSession, tmp_path: str, path: str) -> None:
-    """Replace the table at ``path`` with the one at ``tmp_path`` via
-    filesystem renames (Hadoop FileSystem API, so it works for any
-    supported scheme). A crash before the first rename leaves the old
-    table untouched; the `.bak` copy survives until the swap completes,
-    so the worst post-crash state is a recoverable backup — never a
-    half-rewritten table (parquet rewrites used to overwrite in place)."""
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem holding ``path``; every rename and delete of
+    the commit protocol goes through this handle."""
+    return _hadoop_path(spark, path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+
+
+def _recover(spark: SparkSession, path: str) -> bool:
+    """Undo or finish a commit a crash interrupted (rules in the module
+    docstring); returns whether a table is at ``path``."""
+    fs = _fs(spark, path)
     dst = _hadoop_path(spark, path)
-    tmp = _hadoop_path(spark, tmp_path)
-    bak = _hadoop_path(spark, path + "._bak")
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    bak = _hadoop_path(spark, path + _BAK)
     if fs.exists(bak):
-        fs.delete(bak, True)
-    if not fs.rename(dst, bak):
+        if fs.exists(dst):
+            fs.delete(bak, True)
+        elif not fs.rename(bak, dst):
+            raise IOError(f"recover: could not restore {path}{_BAK}")
+    fs.delete(_hadoop_path(spark, path + _STAGING), True)
+    return fs.exists(dst)
+
+
+def _atomic_replace(spark: SparkSession, tmp_path: str, path: str) -> None:
+    """Swap the table at ``tmp_path`` in as ``path`` via filesystem
+    renames (Hadoop FileSystem API, so it works for any supported
+    scheme). A crash between the renames leaves ``path._bak``, which
+    ``_recover`` restores."""
+    fs = _fs(spark, path)
+    dst = _hadoop_path(spark, path)
+    bak = _hadoop_path(spark, path + _BAK)
+    if fs.exists(dst) and not fs.rename(dst, bak):
         raise IOError(f"atomic replace: could not move {path} aside")
-    if not fs.rename(tmp, dst):
+    if not fs.rename(_hadoop_path(spark, tmp_path), dst):
         fs.rename(bak, dst)  # roll back
         raise IOError(f"atomic replace: could not promote {tmp_path}")
     fs.delete(bak, True)
+
+
+def _commit(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+) -> None:
+    """Make ``df`` the whole table at ``path``: write it to the staging
+    directory, then swap it in. The caller has run ``_recover``."""
+    staging = path + _STAGING
+    writer = df.write.mode("overwrite").format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(staging)
+    _atomic_replace(spark, staging, path)
 
 
 def write_overwrite(
@@ -54,12 +105,16 @@ def write_overwrite(
 ) -> None:
     """Full-table overwrite, schema evolution allowed
     (delta_utils.write_delta_overwrite, delta_utils.py:24-33)."""
-    writer = df.write.format(_fmt()).mode("overwrite")
     if has_delta():
+        writer = df.write.format("delta").mode("overwrite")
         writer = writer.option("overwriteSchema", "true")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.save(path)
+        return
+    spark = df.sparkSession
+    _recover(spark, path)
+    _commit(spark, df, path, partition_by)
 
 
 def write_append(
@@ -73,16 +128,14 @@ def write_append(
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe (delta_utils.py:14-18)."""
+    """Existence probe (delta_utils.py:14-18). On parquet it first
+    recovers an interrupted commit, and is False only for an absent
+    path: a table that is there but unreadable still exists."""
     if has_delta():
         from delta.tables import DeltaTable  # type: ignore
 
         return DeltaTable.isDeltaTable(spark, path)
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
+    return _recover(spark, path)
 
 
 def write_bucketed(
@@ -154,6 +207,7 @@ def optimize_layout(
         cols = ", ".join(f"`{c}`" for c in zorder_by)
         spark.sql(f"OPTIMIZE delta.`{path}` ZORDER BY ({cols})")
         return
+    _recover(spark, path)
     df = spark.read.parquet(path)
     # Partition-count heuristic without touching .rdd (which forces an RDD
     # materialization of the scan): compaction targets ~4 input splits per
@@ -193,12 +247,7 @@ def optimize_layout(
         out = df.repartitionByRange(n, *zorder_by).sortWithinPartitions(
             *zorder_by
         )
-    # Write the re-clustered copy beside the table, then swap atomically:
-    # reading `path` while writing a different path needs no lineage break,
-    # and a mid-rewrite crash can't lose the original.
-    tmp = path + "._tmp_optimize"
-    out.write.mode("overwrite").parquet(tmp)
-    _atomic_replace(spark, tmp, path)
+    _commit(spark, out, path, None)
 
 
 def merge_upsert(
@@ -238,48 +287,36 @@ def merge_upsert(
         write_overwrite(source, path, partition_by)
         return
 
-    if not table_exists(spark, path):
-        write_overwrite(source, path, partition_by)
-        return
-    _replace_keys_and_swap(
-        spark, path, source, source, keys, "._tmp_merge", partition_by
-    )
+    _merge(spark, path, source, source, keys, partition_by)
 
 
-def _replace_keys_and_swap(
+def _merge(
     spark: SparkSession,
     path: str,
     key_rows: DataFrame,
     new_rows: DataFrame,
     keys: list[str],
-    tmp_suffix: str,
     partition_by: list[str] | None,
 ) -> None:
-    """Shared parquet-MERGE tail (merge_upsert + apply_cdc_batch —
-    one home for the rewrite so fixes can't drift between them): drop
-    every target row whose key appears in ``key_rows`` (null-safe <=>,
-    matching the Delta MERGE condition: NULL-keyed rows replace their
-    NULL-keyed match instead of duplicating on every re-run), union
-    ``new_rows``, write to a sibling temp path, swap atomically — a
-    crash mid-write keeps the old table."""
-    target = spark.read.parquet(path)
-    src_keys = key_rows.select(*keys).dropDuplicates(keys).alias("_mrg_s")
-    tgt = target.alias("_mrg_t")
-    cond = reduce(
-        lambda a, b: a & b,
-        [
-            F.col(f"_mrg_t.`{k}`").eqNullSafe(F.col(f"_mrg_s.`{k}`"))
-            for k in keys
-        ],
-    )
-    kept = tgt.join(src_keys, on=cond, how="left_anti")
-    merged = kept.unionByName(new_rows, allowMissingColumns=True)
-    tmp = path + tmp_suffix
-    writer = merged.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
-    _atomic_replace(spark, tmp, path)
+    """Parquet MERGE body of merge_upsert and apply_cdc_batch: drop every
+    target row whose key appears in ``key_rows`` (null-safe <=>, matching
+    the Delta MERGE condition: NULL-keyed rows replace their NULL-keyed
+    match instead of duplicating on every re-run), union ``new_rows`` and
+    commit. With no table yet, ``new_rows`` alone is the table; a table
+    that is there is read once, and a read error propagates."""
+    if _recover(spark, path):
+        target = spark.read.parquet(path)
+        src_keys = key_rows.select(*keys).dropDuplicates(keys).alias("_mrg_s")
+        cond = reduce(
+            lambda a, b: a & b,
+            [
+                F.col(f"_mrg_t.`{k}`").eqNullSafe(F.col(f"_mrg_s.`{k}`"))
+                for k in keys
+            ],
+        )
+        kept = target.alias("_mrg_t").join(src_keys, on=cond, how="left_anti")
+        new_rows = kept.unionByName(new_rows, allowMissingColumns=True)
+    _commit(spark, new_rows, path, partition_by)
 
 
 def apply_cdc_batch(
@@ -302,9 +339,9 @@ def apply_cdc_batch(
     (idempotent), the property replayed CDC streams rely on.
 
     Scale: one window over the change batch (keyed shuffle), one
-    anti-join against the target on the key, one rewrite via the same
-    atomic swap as merge_upsert. With ``partition_by``, scope rewrites
-    by partition on a real table format.
+    anti-join against the target on the key, one rewrite through the
+    shared parquet commit. With ``partition_by``, scope rewrites by
+    partition on a real table format.
     """
     from pyspark.sql import Window
 
@@ -319,14 +356,9 @@ def apply_cdc_batch(
         .drop("_rn")
     )
     upserts = latest.filter(F.col(op_col) != "D").drop(op_col)
-    if not table_exists(spark, path):
-        write_overwrite(upserts, path, partition_by)
-        return
     # keys come from ALL latest changes (deletes drop the key from the
     # table); only the upsert rows come back in
-    _replace_keys_and_swap(
-        spark, path, latest, upserts, keys, "._tmp_cdc", partition_by
-    )
+    _merge(spark, path, latest, upserts, keys, partition_by)
 
 
 def _spread_bits16(x):
@@ -364,11 +396,12 @@ def delete_where(
     rows matching ``predicate`` (the parquet stand-in for Delta's
     DELETE WHERE — right-to-erasure and retention-window enforcement).
 
-    Returns the number of rows deleted. Uses the same atomic-swap path
-    as merge_upsert, so a crash mid-rewrite keeps the old table; on a
-    real table format with ``partition_by``, only affected partitions
-    need rewriting.
+    Returns the number of rows deleted. Commits like every parquet
+    mutation, so a crash mid-rewrite keeps the old table; on a real
+    table format with ``partition_by``, only affected partitions need
+    rewriting.
     """
+    _recover(spark, path)
     df = spark.read.parquet(path)
     kept = df.filter(~predicate | predicate.isNull())
     # one aggregate, not two full-scan count()s: rows are deleted iff
@@ -378,12 +411,7 @@ def delete_where(
     ).collect()[0][0] or 0
     if n_deleted == 0:
         return 0
-    tmp = path + "._tmp_delete"
-    writer = kept.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(tmp)
-    _atomic_replace(spark, tmp, path)
+    _commit(spark, kept, path, partition_by)
     return n_deleted
 
 

@@ -8,6 +8,7 @@ import json
 import pyspark.sql.functions as F
 from pyspark.sql import types as T
 
+from distributed_mobility_data_pipeline_spark.ml import monitoring
 from distributed_mobility_data_pipeline_spark.sources import readers, writers
 
 
@@ -44,6 +45,17 @@ def test_jsonl_log_reader(spark, tmp_path):
     assert df.count() == 3
     ok = df.filter(F.col("status") == 200).agg(F.avg("latency_ms")).collect()[0][0]
     assert abs(ok - 26.25) < 1e-9
+    # a torn last line (crash mid-append) is dropped, not read as a NULL row
+    torn = tmp_path / "torn_log.jsonl"
+    torn.write_text(
+        "\n".join(json.dumps(r) for r in rows) + '\n{"endpoint": "/predict/de'
+    )
+    df = readers.read_json_log(spark, str(torn), schema)
+    assert df.count() == 3
+    groups = sorted(
+        (r.endpoint, r.n_requests) for r in monitoring.latency_stats(df).collect()
+    )
+    assert groups == [("/predict/demand", 2), ("/predict/surge", 1)]
 
 
 def test_optimize_layout_parquet(spark, tmp_path):

@@ -1,10 +1,15 @@
-"""Write-path semantics (SURVEY.md §2.1 S3-S5): overwrite, append, and
+"""Write-path semantics (SURVEY.md §2.1 S3-S5): overwrite, append,
 MERGE idempotency — re-running the same upsert must not duplicate rows
-(the property batch_scoring.py:151-186 relies on)."""
+(the property batch_scoring.py:151-186 relies on) — and a parquet commit
+that leaves the old or the new table whichever step fails."""
 
 from __future__ import annotations
 
+import os
+
+import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from distributed_mobility_data_pipeline_spark.sources import writers
 
@@ -331,3 +336,134 @@ def test_optimize_layout_morton_3col_roundtrip(spark, tmp_path):
     back = spark.read.parquet(p)
     assert back.count() == 500
     assert {r.k for r in back.collect()} == set(range(500))
+
+
+# --- crash consistency of the parquet commit -------------------------------
+# writers._fs is the FileSystem handle behind every rename and delete of the
+# commit; _FailingFs makes its k-th rename or delete raise.
+
+OLD = [(k, f"d{k % 2}", float(k)) for k in range(1, 7)]
+MERGE_SRC = [(2, "d0", 20.0), (7, "d1", 7.0)]
+CDC = [
+    (2, "d0", 20.0, 10, "U"), (3, None, None, 10, "D"), (7, "d1", 7.0, 10, "I"),
+    (7, "d1", 70.0, 11, "U"), (5, "d1", 50.0, 9, "U"), (5, None, None, 12, "D"),
+]
+NEW_TABLE = [(k, "d9", float(-k)) for k in range(10, 13)]
+
+
+class _FailingFs:
+    def __init__(self, fs, k):
+        self._fs, self._k, self.steps = fs, k, 0
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def _step(self, name, *args):
+        self.steps += 1
+        if self.steps == self._k:
+            raise IOError(f"injected failure at {name} #{self._k}")
+        return getattr(self._fs, name)(*args)
+
+    def rename(self, *args):
+        return self._step("rename", *args)
+
+    def delete(self, *args):
+        return self._step("delete", *args)
+
+
+def _replay(changes):
+    """pandas replay of a change batch on OLD: the latest (ts, op) per key
+    wins, deletes drop the key, inserts and updates replace the row."""
+    ch = pd.DataFrame(changes, columns=["k", "ds", "v", "ts", "op"])
+    latest = ch.sort_values(["ts", "op"], ascending=False).drop_duplicates("k")
+    state = pd.DataFrame(OLD, columns=["k", "ds", "v"]).set_index("k")
+    state = state.drop(index=latest["k"], errors="ignore")
+    ups = latest[latest["op"] != "D"].set_index("k")[["ds", "v"]]
+    return sorted(pd.concat([state, ups]).itertuples(name=None))
+
+
+def _rows(spark, p):
+    rows = spark.read.parquet(p).select("k", "ds", "v").collect()
+    return sorted(tuple(r) for r in rows)
+
+
+@pytest.mark.parametrize(
+    "name", ["merge_upsert", "apply_cdc_batch", "delete_where", "write_overwrite"]
+)
+def test_crash_at_every_fs_step_leaves_old_or_new(
+    spark, tmp_path, monkeypatch, name
+):
+    call, new = {
+        "merge_upsert": (
+            lambda p: writers.merge_upsert(spark, _df(spark, MERGE_SRC), p, ["k"]),
+            _replay([(*r, 0, "U") for r in MERGE_SRC]),
+        ),
+        "apply_cdc_batch": (
+            lambda p: writers.apply_cdc_batch(
+                spark,
+                spark.createDataFrame(
+                    CDC, "k int, ds string, v double, ts long, op string"
+                ),
+                p, ["k"], "ts",
+            ),
+            _replay(CDC),
+        ),
+        "delete_where": (
+            lambda p: writers.delete_where(spark, p, F.col("v") > 3.5),
+            [r for r in OLD if r[2] <= 3.5],
+        ),
+        "write_overwrite": (
+            lambda p: writers.write_overwrite(_df(spark, NEW_TABLE), p, ["ds"]),
+            NEW_TABLE,
+        ),
+    }[name]
+    real_fs = writers._fs
+
+    def run_failing_at(k):
+        p = str(tmp_path / f"t{k}")
+        _df(spark, OLD).coalesce(2).write.parquet(p)
+        proxy = _FailingFs(real_fs(spark, p), k)
+        monkeypatch.setattr(writers, "_fs", lambda s, path: proxy)
+        try:
+            call(p)
+        finally:
+            monkeypatch.setattr(writers, "_fs", real_fs)
+        return p, proxy.steps
+
+    p, n_steps = run_failing_at(0)
+    assert n_steps >= 3 and _rows(spark, p) == new
+    for k in range(1, n_steps + 1):
+        with pytest.raises(IOError, match="injected"):
+            run_failing_at(k)
+        p = str(tmp_path / f"t{k}")
+        assert writers.table_exists(spark, p), k  # recovers
+        assert _rows(spark, p) in (sorted(OLD), new), k
+        call(p)
+        assert _rows(spark, p) == new, k
+        left = sorted(os.listdir(tmp_path))
+        assert left == sorted(f"t{j}" for j in range(k + 1)), k  # no leftovers
+
+
+def test_merge_after_crash_between_renames_keeps_table(spark, tmp_path):
+    # a crash between the swap's two renames leaves no table and the old
+    # one at path._bak: the next merge restores it, never recreating the
+    # table from its one batch
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_df(spark, [(k, "a", 1.0) for k in range(1000)]), p)
+    os.rename(p, p + "._bak")
+    writers.merge_upsert(spark, _df(spark, [(5000, "b", 1.0)]), p, ["k"])
+    assert spark.read.parquet(p).count() == 1001
+    assert os.listdir(tmp_path) == ["t"]
+
+
+def test_merge_into_unreadable_table_raises_and_keeps_files(spark, tmp_path):
+    p = tmp_path / "t"
+    assert not writers.table_exists(spark, str(p))
+    p.mkdir()
+    (p / "part-00000.parquet").write_bytes(b"not a parquet file")
+    assert writers.table_exists(spark, str(p))  # there, though unreadable
+    with pytest.raises(Exception):
+        writers.merge_upsert(spark, _df(spark, [(1, "a", 1.0)]), str(p), ["k"])
+    assert [(f.name, f.read_bytes()) for f in p.iterdir()] == [
+        ("part-00000.parquet", b"not a parquet file")
+    ]
