@@ -331,97 +331,7 @@ def _stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Round-17 rotation (driver caps its check at the first 50 queries() keys;
-# only a prefix of each priority band is reached per round — full coverage
-# accrues across rotations; tools/rotate_driver_order.py orders it).
-# All 217 queries have driver rows across r01-r16 with zero hash-FAILs,
-# so the rotation is pure recency maintenance:
-# 1) the 17 queries whose latest driver green is r12 (drains the band —
-#    after this round no query's latest row is older than r13);
-# 2) the 33 oldest r13 greens, queries()-order, filling the 50-slot
-#    window (17 r13 greens remain for r18's band).
-# Latest-round histogram going in: {r12: 17, r13: 50, r14: 50, r15: 50,
-# r16: 50}. All queries were locally oracle-verified on current data
-# this session (tools/verify_local.py) before commit, so staleness risk
-# is bounded.
-#
-# _DRIVER_FIRST_THROUGH_ROUND pins WHICH artifacts this rotation was
-# computed from (CORRECTNESS_r01..r{N}): tests/test_rotation_tool.py
-# bounds its recomputation to those rounds, so the driver landing
-# CORRECTNESS_r{N+1}.json mid-round cannot redden the suite — the next
-# session's rotation bumps this constant in the same commit as the
-# regenerated list (the tool prints both).
-_DRIVER_FIRST_THROUGH_ROUND: int = 17
-_DRIVER_FIRST: list[str] = [
-    "join_range_bucketed",  # latest green r13
-    "json_extract_props",  # latest green r13
-    "json_props_agg",  # latest green r13
-    "ml_demand_features",  # latest green r13
-    "ml_churn_features",  # latest green r13
-    "ml_score_pandas_udf",  # latest green r13
-    "ml_score_expression",  # latest green r13
-    "metrics_calibration",  # latest green r13
-    "ml_score_surge",  # latest green r13
-    "serve_demand_batch",  # latest green r13
-    "ml_train_demand_models",  # latest green r13
-    "ml_train_classifier",  # latest green r13
-    "mm_media_metadata",  # latest green r13
-    "mm_extract_features",  # latest green r13
-    "mm_sample_frames",  # latest green r13
-    "mm_resize_meta",  # latest green r13
-    "drift_missing_rate_shift",  # latest green r13
-    "pipeline_corpus_health",  # latest green r14
-    "pipeline_corpus_prep",  # latest green r14
-    "text_quality_cutoff",  # latest green r14
-    "text_unigram_logprob",  # latest green r14
-    "text_bigram_pmi",  # latest green r14
-    "text_vocab_coverage",  # latest green r14
-    "sample_importance_weighted",  # latest green r14
-    "win_scd2_history",  # latest green r14
-    "dedup_docs_segments",  # latest green r14
-    "scale_skew_report",  # latest green r14
-    "agg_incremental_daily_revenue",  # latest green r14
-    "scale_partition_plan",  # latest green r14
-    "text_winnow_fingerprints",  # latest green r14
-    "dedup_docs_winnow",  # latest green r14
-    "dedup_docs_winnow_clusters",  # latest green r14
-    "sample_cluster_safe_split",  # latest green r14
-    "dedup_docs_winnow_spans",  # latest green r14
-    "dedup_docs_clusters",  # latest green r14
-    "dedup_docs_clusters_jaccard",  # latest green r14
-    "dedup_docs_simhash",  # latest green r14
-    "dedup_docs_simhash_hamming",  # latest green r14
-    "sim_embedding_drift",  # latest green r14
-    "sim_cosine_topk",  # latest green r14
-    "sim_knn_label_agreement",  # latest green r14
-    "sim_pairs_above_threshold",  # latest green r14
-    "dedup_embedding_clusters",  # latest green r14
-    "agg_forecast_revenue_change",  # latest green r14
-    "agg_priority_shipping",  # latest green r14
-    "agg_promo_revenue_pct",  # latest green r14
-    "agg_shipping_priority",  # latest green r14
-    "agg_local_supplier_volume",  # latest green r14
-    "quality_expectations",  # latest green r14
-    "behavior_funnel",  # latest green r14
-]
-
-
-def _driver_order(q: dict, require_all: bool = False) -> dict:
-    # oracle_sql() is a legitimate subset of queries() (rows-only queries
-    # have no oracle), so the typo guard only fires on the full dict.
-    if require_all:
-        unknown = set(_DRIVER_FIRST) - q.keys()
-        assert not unknown, f"_DRIVER_FIRST names not in queries(): {sorted(unknown)}"
-    head = {k: q[k] for k in _DRIVER_FIRST if k in q}
-    tail = {k: v for k, v in q.items() if k not in head}
-    return {**head, **tail}
-
-
 def queries() -> dict[str, QueryFn]:
-    return _driver_order(_all_queries(), require_all=True)
-
-
-def _all_queries() -> dict[str, QueryFn]:
     return {
         # §2.5 aggregates
         "agg_hourly_demand": lambda s, d: agg_ops.hourly_demand(_t(s, d, "events")),
@@ -2149,12 +2059,6 @@ _MH_COLS = ",\n                   ".join(
 )
 
 
-def oracle_sql() -> dict[str, str]:
-    # Same driver-facing order as queries(), in case the driver iterates this
-    # dict instead (it compares per-name, but order determines any cap).
-    return _driver_order(_all_oracle_sql())
-
-
 def _bpe_learn_oracle(n_merges: int = 8) -> str:
     """Unrolled DuckDB oracle for ``text_bpe_learn``: BPE's per-step
     argmax+merge is iterative, but with a FIXED n_merges each step
@@ -2211,7 +2115,7 @@ FROM ({union})
     )
 
 
-def _all_oracle_sql() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
     return {
         "agg_hourly_demand": """
             SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_ts,

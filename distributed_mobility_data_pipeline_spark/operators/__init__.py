@@ -26,8 +26,4 @@ and never call ``unpersist()``. Why:
   ITERATIVE loops that must also cut lineage; since r20 those use
   ``localCheckpoint(eager=False)`` where a convergence count is the
   iteration's first action anyway (dedup_llm.dup_labels).
-- Bench-side visibility: queries whose warm repeats re-read one of
-  these caches are listed in BENCH_DETAIL.json's ``persist_warmed``
-  field (bench._detect_persist_warmed), so warm medians stay
-  interpretable without changing what they measure.
 """

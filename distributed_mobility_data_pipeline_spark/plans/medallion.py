@@ -15,6 +15,8 @@ Domain functions operate on the reference's trips schema
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,9 +25,14 @@ from distributed_mobility_data_pipeline_spark.sources import writers
 
 
 def bronze(raw: DataFrame, source_label: str = "memory") -> DataFrame:
-    """Bronze: raw + audit columns (bronze_loader.py:30-35, S1/P3)."""
+    """Bronze: raw + audit columns (bronze_loader.py:30-35, S1/P3).
+
+    The load time is a literal taken once here, not current_timestamp(),
+    which Spark evaluates once per query: bronze and silver are written
+    by separate queries and must carry the same ``ingested_at``."""
+    loaded_at = datetime.now(timezone.utc)
     return (
-        raw.withColumn("ingested_at", F.current_timestamp())
+        raw.withColumn("ingested_at", F.lit(loaded_at))
         .withColumn("source_file", F.lit(source_label))
         .withColumn("requested_date", F.to_date("requested_at"))
     )
@@ -41,8 +48,8 @@ def silver(bronze_df: DataFrame) -> DataFrame:
     df = cleaning.require_not_null(
         df, ["trip_id", "user_id", "driver_id", "requested_at"]
     )
-    # bronze() stamps one current_timestamp() per QUERY and one literal
-    # source_file per load, so same-load duplicates of a trip_id tie on
+    # bronze() stamps one ingested_at literal and one source_file
+    # literal per load, so same-load duplicates of a trip_id tie on
     # both — tiebreak on the remaining payload columns too, making the
     # survivor a deterministic function of row CONTENT rather than
     # shuffle order (keep_latest exists precisely to fix the reference's

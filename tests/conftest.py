@@ -7,10 +7,9 @@ import pytest
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
-# Single shared insert for the bench/rotation tooling under tools/ —
-# tool tests import canary_anchor, bench_history, rotate_driver_order
-# etc. directly; duplicating this per test grew sys.path on every run
-# (ADVICE r15).
+# Single shared insert for the scripts under tools/ — tool tests
+# (test_axis_tool.py) import them directly; duplicating this per test
+# grew sys.path on every run.
 sys.path.insert(0, os.path.join(_REPO_ROOT, "tools"))
 
 from distributed_mobility_data_pipeline_spark.session import get_spark

@@ -89,11 +89,28 @@ def test_medallion_persist_roundtrip(spark, tmp_path):
     assert 0 < pruned.count() < back.count()
 
 
+def test_bronze_and_silver_share_one_load_time(spark, tmp_path):
+    # bronze and silver are written by separate queries; both must hold
+    # the one load time bronze() stamped, not a per-query clock reading
+    lake = tmp_path / "lake"
+    medallion.run_medallion(spark.createDataFrame(trips_pdf(100)), str(lake))
+    stamps = {
+        name: {
+            r[0]
+            for r in spark.read.parquet(str(lake / name))
+            .select("ingested_at").distinct().collect()
+        }
+        for name in ("bronze", "silver")
+    }
+    assert len(stamps["bronze"]) == 1
+    assert stamps["silver"] == stamps["bronze"]
+
+
 def test_silver_dedup_is_deterministic_on_same_load_duplicates(spark):
-    """bronze() stamps one current_timestamp per query and one
-    source_file per load, so duplicate trip_ids tie on the dedup order
-    columns — the survivor must be a deterministic function of row
-    CONTENT (payload tiebreak), not of shuffle order."""
+    """bronze() stamps one ingested_at and one source_file per load, so
+    duplicate trip_ids tie on the dedup order columns — the survivor
+    must be a deterministic function of row CONTENT (payload
+    tiebreak), not of shuffle order."""
     import pandas as pd
 
     pdf = trips_pdf(n=40, n_dups=0)
