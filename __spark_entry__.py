@@ -52,8 +52,10 @@ from distributed_mobility_data_pipeline_spark.ml import scoring as mlscore
 from distributed_mobility_data_pipeline_spark.ml import serving as serve_ops
 from distributed_mobility_data_pipeline_spark.ml import training as mltrain
 from distributed_mobility_data_pipeline_spark.operators import windows as win_ops
-from distributed_mobility_data_pipeline_spark.sources.catalog import register_views
-from distributed_mobility_data_pipeline_spark.sources.readers import read_events
+from distributed_mobility_data_pipeline_spark.sources.readers import (
+    load_testdata,
+    read_events,
+)
 from distributed_mobility_data_pipeline_spark.sources.writers import (
     morton_key_2d,
     morton_key_nd,
@@ -194,7 +196,7 @@ def _morton_nd_sql(cols: list[str], bits: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-# Pure-SQL surface (sources/catalog.py registers the dataset as temp
+# Pure-SQL surface (readers.load_testdata registers the dataset as temp
 # views; Catalyst treats the SQL text identically to DataFrame code).
 # The same ANSI text runs on DuckDB as the oracle.
 _SEGMENT_LTV_SQL = """
@@ -218,7 +220,7 @@ _SEGMENT_LTV_SQL = """
 
 def _sql_segment_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-API twin query: per-segment customer lifetime value."""
-    register_views(spark, sf_dir, ("customer", "orders"))
+    load_testdata(spark, sf_dir, ["customer", "orders"])
     return spark.sql(_SEGMENT_LTV_SQL)
 
 

@@ -75,10 +75,3 @@ def score_surge_expression(features: DataFrame) -> DataFrame:
         F.round(F.least(F.greatest(raw, F.lit(1.0)), F.lit(3.0)), 3),
     )
 
-
-def with_run_metadata(df: DataFrame, run_id: str) -> DataFrame:
-    """Scoring run metadata (batch_scoring.py:145-149). scored_at is
-    wall-clock → excluded from oracle-compared projections."""
-    return df.withColumn("scoring_run_id", F.lit(run_id)).withColumn(
-        "scored_at_utc", F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
-    )

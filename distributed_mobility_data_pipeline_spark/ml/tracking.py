@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.sources import writers
+
 RUN_SCHEMA = (
     "run_name string, params map<string,string>, "
     "metrics map<string,double>, logged_at string"
@@ -38,7 +40,7 @@ def log_run(
     runs are replayable/deterministic in tests."""
     row = [(run_name, {k: str(v) for k, v in params.items()},
             {k: float(v) for k, v in metrics.items()}, logged_at)]
-    spark.createDataFrame(row, RUN_SCHEMA).write.mode("append").parquet(store)
+    writers.write_append(spark.createDataFrame(row, RUN_SCHEMA), store)
 
 
 def runs(spark: SparkSession, store: str) -> DataFrame:

@@ -21,14 +21,6 @@ def normalize_categoricals(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """Explicit type hardening (bronze_loader.py:22-26, P2)."""
-    for c, t in casts.items():
-        if c in df.columns:
-            df = df.withColumn(c, F.col(c).cast(t))
-    return df
-
-
 def null_out_when(df: DataFrame, target: str, cond: Column) -> DataFrame:
     """Conditional null-out — P7: the reference nulls `completed_at` for
     cancelled trips (bronze_to_silver.py:28-31)."""
@@ -47,11 +39,6 @@ def require_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.filter(pred) if pred is not None else df
 
 
-def drop_null_rows(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """P8 — na.drop passthrough (feature_engineering.py:131 etc.)."""
-    return df.na.drop(subset=subset)
-
-
 def ensure_columns(df: DataFrame, defaults: Mapping[str, Column]) -> DataFrame:
     """Default-column injection iff missing — P9 schema repair
     (batch_scoring.py:50-63). Makes pipelines tolerant of upstream
@@ -59,17 +46,6 @@ def ensure_columns(df: DataFrame, defaults: Mapping[str, Column]) -> DataFrame:
     for c, expr in defaults.items():
         if c not in df.columns:
             df = df.withColumn(c, expr)
-    return df
-
-
-def with_audit_columns(df: DataFrame, date_source: str | None = None) -> DataFrame:
-    """Bronze audit columns — P3 (bronze_loader.py:30-35):
-    ingestion timestamp, source file, partition date."""
-    df = df.withColumn("ingested_at", F.current_timestamp()).withColumn(
-        "source_file", F.input_file_name()
-    )
-    if date_source:
-        df = df.withColumn(f"{date_source}_date", F.to_date(F.col(date_source)))
     return df
 
 

@@ -54,14 +54,6 @@ def negative_report(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def required_columns_report(df: DataFrame, required: list[str]) -> DataFrame:
-    """Schema-presence check (data_quality.py:22-24) as a table."""
-    spark = df.sparkSession
-    present = set(df.columns)
-    rows = [(c, c in present) for c in sorted(required)]
-    return spark.createDataFrame(rows, "column string, present boolean")
-
-
 def freshness(df: DataFrame, date_col: str) -> DataFrame:
     """Max-date freshness probe — A14 (silver_dag.py:105-128,
     aspirational in the reference)."""

@@ -34,14 +34,6 @@ def sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame
     return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict[str, float], seed: int = 42
-) -> DataFrame:
-    """Per-stratum fractions — `sampleBy` (reference-style class
-    rebalancing; partitioning-dependent)."""
-    return df.sampleBy(strata_col, fractions, seed)
-
-
 def hash_sample(
     df: DataFrame, key_col: str, fraction: float, salt: str = "s0"
 ) -> DataFrame:

@@ -15,18 +15,8 @@ def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.union(b).distinct()
 
 
-def union_by_name(a: DataFrame, b: DataFrame, allow_missing: bool = False) -> DataFrame:
-    """Schema-aligned union — safer than positional at scale."""
-    return a.unionByName(b, allowMissingColumns=allow_missing)
-
-
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Multiset difference (EXCEPT ALL): occurrences subtract."""
-    return a.exceptAll(b)
 
 
 def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:

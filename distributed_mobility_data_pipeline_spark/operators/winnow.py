@@ -147,32 +147,6 @@ def _window_min_keys(w: int) -> "F.Column":
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def kgram_hashes(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, pos, h): the rolling word-level k-gram hash stream per
-    document, pos 1-based. Documents with fewer than k words emit
-    nothing. Map-only (normalize → slice → md5), no shuffle.
-
-    The explode takes the hash-array EXPRESSION, not a materialized
-    attribute — see the _window_min_keys docstring for why."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    tokd = docs.select(
-        F.col(id_col), F.split(normalize_text(text_col), " ").alias("_toks")
-    )
-    return tokd.select(
-        F.col(id_col), F.posexplode(_kgram_hash_expr(k)).alias("pos0", "h")
-    ).select(
-        id_col,
-        (F.col("pos0") + 1).cast("bigint").alias("pos"),
-        F.col("h"),
-    )
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     k: int = 3,

@@ -5,9 +5,10 @@ with Delta tables as the hand-off (bronze_loader → bronze_to_silver →
 silver_to_gold → gold_aggregates, README.md:106-134). Here each layer is
 a pure ``DataFrame -> DataFrame`` function and the composition is ONE
 lazy plan: Catalyst sees silver's filters while planning bronze's scan
-(filter/projection pushdown across layer boundaries), and
-materialization between layers becomes an explicit choice
-(``materialize=`` paths) instead of a structural requirement.
+(filter/projection pushdown across layer boundaries). ``run_medallion``
+with ``base_dir`` writes every layer through ``writers.write_overwrite``;
+nothing is materialized between the writes, so each written table
+re-runs the plan from the raw input (ROADMAP open item 4).
 
 Domain functions operate on the reference's trips schema
 (schemas.TRIPS_RAW / TRIPS_BRONZE; FIXTURES.md §1).

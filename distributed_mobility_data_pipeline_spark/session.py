@@ -9,8 +9,9 @@ shuffle.partitions=200, UTC) but Spark-first:
 - Arrow enabled for the pandas-UDF inference path.
 - UTC session timezone pinned so timestamp semantics match the DuckDB
   oracle and the reference (config.yaml:22).
-- Delta Lake extensions are attached only when delta-spark is importable
-  (not present in this environment; parquet is the default table format).
+- No Delta Lake extensions: parquet is the package's one table format,
+  and sources/writers.py gives it the reference's Delta write semantics
+  (overwrite, MERGE, CDC, delete, Z-order) through one crash-safe commit.
 """
 
 from __future__ import annotations
@@ -18,13 +19,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-try:  # delta-spark is optional; gate behind import (not in this image)
-    from delta import configure_spark_with_delta_pip  # type: ignore
-
-    _HAS_DELTA = True
-except ImportError:
-    _HAS_DELTA = False
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -59,23 +53,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if _HAS_DELTA:
-        builder = (
-            builder.config(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
-        builder = configure_spark_with_delta_pip(builder)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def has_delta() -> bool:
-    """Whether delta-spark is on the classpath (drives writer fallbacks)."""
-    return _HAS_DELTA

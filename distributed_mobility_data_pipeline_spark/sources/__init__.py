@@ -3,7 +3,6 @@ from distributed_mobility_data_pipeline_spark.sources.readers import (
     read_csv,
     read_json_log,
     read_parquet,
-    read_table,
 )
 from distributed_mobility_data_pipeline_spark.sources.writers import (
     merge_upsert,
@@ -16,7 +15,6 @@ __all__ = [
     "read_csv",
     "read_json_log",
     "read_parquet",
-    "read_table",
     "merge_upsert",
     "write_append",
     "write_overwrite",

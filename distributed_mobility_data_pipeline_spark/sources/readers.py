@@ -3,8 +3,8 @@
 Re-expresses the reference's scan surface:
 - S1 CSV scan (bronze_loader.py:15-20) — but with an explicit schema; a
   schema-inference pass over 100 TB of CSV is a full extra read.
-- S2 table scan (delta_utils.py:21-22) — parquet-first; Delta format when
-  delta-spark is on the classpath.
+- S2 table scan (delta_utils.py:21-22) — ``read_parquet``: parquet is the
+  package's one table format (sources/writers.py writes it).
 - S9 JSONL API-log scan (model_monitoring.py:136-152 reads the log in
   plain Python; here it is a schema'd distributed ``spark.read.json``).
 """
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_mobility_data_pipeline_spark import schemas
-from distributed_mobility_data_pipeline_spark.session import has_delta
 
 
 def read_csv(
@@ -39,28 +38,6 @@ def read_csv(
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Managed-table scan: Delta when available, else parquet.
-
-    Equivalent capability to delta_utils.read_delta (delta_utils.py:21-22).
-    """
-    if has_delta():
-        return spark.read.format("delta").load(path)
-    return spark.read.parquet(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """ORC scan (built into Spark; same predicate/column pushdown story
-    as parquet). The reference never reads ORC, but a drop-in engine
-    meets warehouses where half the tables are ORC."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
 
 
 def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -122,12 +99,12 @@ def load_testdata(
     spark: SparkSession, sf_dir: str, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet tables from ``sf_dir`` and register each
-    as a temp view (so both DataFrame and ``spark.sql`` paths work).
-    ``events`` goes through :func:`read_events` — like
-    catalog.register_views — so its ts column is normalized to
-    TimestampType regardless of the file's timestamp encoding (a plain
-    parquet read leaves µs data as timestamp_ntz and fails outright on
-    the nanos encoding FIXTURES.md documents)."""
+    as a temp view (so both DataFrame and ``spark.sql`` paths work);
+    tables missing from ``sf_dir`` are skipped. ``events`` goes through
+    :func:`read_events`, so its ts column is normalized to TimestampType
+    regardless of the file's timestamp encoding (a plain parquet read
+    leaves µs data as timestamp_ntz and fails outright on the nanos
+    encoding FIXTURES.md documents)."""
     out: dict[str, DataFrame] = {}
     for name in tables or schemas.TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{name}.parquet")

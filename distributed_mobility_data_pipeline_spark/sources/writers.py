@@ -1,14 +1,16 @@
-"""Writers (SURVEY.md §2.1 S3/S4/S5/S10).
+"""Writers (SURVEY.md §2.1 S3/S4/S5/S10): the one module that writes
+tables.
 
 The reference writes Delta (delta_utils.py:24-33, batch_scoring.py:151-186).
-delta-spark is not in this environment, so the default table format is
-parquet with the same write semantics; every function upgrades to Delta
-transparently when delta-spark is importable. MERGE (S5) is re-expressed
-as the canonical Spark emulation: target anti-join source on the merge
-keys, union the source, rewrite — idempotent for re-runs with the same
-keys, which is the property batch_scoring.py:161-186 relies on.
+Here every table is parquet, with the same write semantics. MERGE (S5) is
+re-expressed as the canonical Spark emulation: target anti-join source on
+the merge keys, union the source, rewrite — idempotent for re-runs with
+the same keys, which is the property batch_scoring.py:161-186 relies on.
+Streaming sinks and the ML run store write through these functions too;
+``tests/test_writers.py`` fails when another package module writes a
+DataFrame itself (the serving JSONL event log is the one listed exception).
 
-Parquet commit protocol. Every parquet table mutation (write_overwrite,
+Commit protocol. Every table mutation (write_overwrite,
 merge_upsert, apply_cdc_batch, delete_where, optimize_layout) ends in
 ``_commit``: it writes the whole new table to ``<path>._tmp_commit``,
 then ``_atomic_replace`` renames ``<path>`` to ``<path>._bak``, the
@@ -30,14 +32,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mobility_data_pipeline_spark.session import has_delta
-
 _STAGING = "._tmp_commit"
 _BAK = "._bak"
-
-
-def _fmt() -> str:
-    return "delta" if has_delta() else "parquet"
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -105,13 +101,6 @@ def write_overwrite(
 ) -> None:
     """Full-table overwrite, schema evolution allowed
     (delta_utils.write_delta_overwrite, delta_utils.py:24-33)."""
-    if has_delta():
-        writer = df.write.format("delta").mode("overwrite")
-        writer = writer.option("overwriteSchema", "true")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        return
     spark = df.sparkSession
     _recover(spark, path)
     _commit(spark, df, path, partition_by)
@@ -121,20 +110,16 @@ def write_append(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Append sink for metrics/drift/log rows (batch_scoring.py:245)."""
-    writer = df.write.format(_fmt()).mode("append")
+    writer = df.write.format("parquet").mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe (delta_utils.py:14-18). On parquet it first
-    recovers an interrupted commit, and is False only for an absent
-    path: a table that is there but unreadable still exists."""
-    if has_delta():
-        from delta.tables import DeltaTable  # type: ignore
-
-        return DeltaTable.isDeltaTable(spark, path)
+    """Existence probe (delta_utils.py:14-18). It first recovers an
+    interrupted commit, and is False only for an absent path: a table
+    that is there but unreadable still exists."""
     return _recover(spark, path)
 
 
@@ -174,18 +159,6 @@ def overwrite_partitions(
     )
 
 
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """ORC sink (mode=overwrite) — the interop twin of readers.read_orc
-    for warehouses standardized on ORC. Same pushdown/pruning behavior
-    as parquet on the read side."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def optimize_layout(
     spark: SparkSession,
     path: str,
@@ -196,17 +169,13 @@ def optimize_layout(
     """Data-layout maintenance — S11 (gold_dag.py:194-212 calls a
     nonexistent ``delta.optimize_table(zorder_by=...)``; working here).
 
-    Delta path: OPTIMIZE ... ZORDER BY. Parquet path: range-repartition
-    + in-partition sort so min/max row-group stats prune on the locality
-    columns. With ``morton=True`` and integer columns, the sort key is a
-    true interleaved-bit Z-order key (``morton_key_2d`` for two columns,
+    Range-repartition + in-partition sort so min/max row-group stats
+    prune on the locality columns (what Delta's OPTIMIZE ... ZORDER BY
+    does), committed like every table mutation. With ``morton=True``
+    and integer columns, the sort key is a true interleaved-bit Z-order key (``morton_key_2d`` for two columns,
     ``morton_key_nd`` for three or more) — multi-dimensional locality
     like Delta's ZORDER, not just lexicographic — so predicates on ANY
     of the columns prune row groups."""
-    if has_delta():
-        cols = ", ".join(f"`{c}`" for c in zorder_by)
-        spark.sql(f"OPTIMIZE delta.`{path}` ZORDER BY ({cols})")
-        return
     _recover(spark, path)
     df = spark.read.parquet(path)
     # Partition-count heuristic without touching .rdd (which forces an RDD
@@ -259,34 +228,15 @@ def merge_upsert(
 ) -> None:
     """Upsert ``source`` into the table at ``path`` on ``keys``.
 
-    Delta path: ``whenMatchedUpdateAll().whenNotMatchedInsertAll()``
-    (batch_scoring.py:161-186). Parquet path: emulate with
-    target ⟕anti source on keys, then union source and rewrite — the
-    matched rows are replaced wholesale, unmatched inserted, giving the
-    same end state as the Delta MERGE for update-all/insert-all.
+    Emulates Delta's ``whenMatchedUpdateAll().whenNotMatchedInsertAll()``
+    (batch_scoring.py:161-186): target ⟕anti source on keys, then union
+    source and rewrite — the matched rows are replaced wholesale,
+    unmatched inserted, giving the same end state as that MERGE. With no
+    table at ``path`` yet, ``source`` becomes the table.
 
-    At 100 TB the parquet emulation rewrites the table; with partition
-    columns supplied, only affected partitions need rewriting (dynamic
-    partition overwrite) — but prefer real Delta/Iceberg MERGE on a
-    cluster with those jars.
+    The emulation rewrites the whole table through the shared commit, so
+    its cost grows with the table, not the batch (ROADMAP open item 2).
     """
-    if has_delta():
-        from delta.tables import DeltaTable  # type: ignore
-
-        if DeltaTable.isDeltaTable(spark, path):
-            tgt = DeltaTable.forPath(spark, path)
-            cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-            (
-                tgt.alias("t")
-                .merge(source.alias("s"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
-        write_overwrite(source, path, partition_by)
-        return
-
     _merge(spark, path, source, source, keys, partition_by)
 
 
@@ -298,7 +248,7 @@ def _merge(
     keys: list[str],
     partition_by: list[str] | None,
 ) -> None:
-    """Parquet MERGE body of merge_upsert and apply_cdc_batch: drop every
+    """MERGE body of merge_upsert and apply_cdc_batch: drop every
     target row whose key appears in ``key_rows`` (null-safe <=>, matching
     the Delta MERGE condition: NULL-keyed rows replace their NULL-keyed
     match instead of duplicating on every re-run), union ``new_rows`` and
@@ -330,7 +280,7 @@ def apply_cdc_batch(
 ) -> None:
     """Apply a CDC change batch (op ∈ {I, U, D} + change timestamp) to
     the table at ``path`` — the change-data-feed consumer the Delta/
-    Debezium world expects, on the parquet emulation layer.
+    Debezium world expects.
 
     Within the batch, only each key's LATEST change applies (row_number
     over the key ordered by ts desc — out-of-order and duplicate change
@@ -340,8 +290,8 @@ def apply_cdc_batch(
 
     Scale: one window over the change batch (keyed shuffle), one
     anti-join against the target on the key, one rewrite through the
-    shared parquet commit. With ``partition_by``, scope rewrites by
-    partition on a real table format.
+    shared commit; ``partition_by`` lays the rewritten table out by
+    those columns.
     """
     from pyspark.sql import Window
 
@@ -396,10 +346,9 @@ def delete_where(
     rows matching ``predicate`` (the parquet stand-in for Delta's
     DELETE WHERE — right-to-erasure and retention-window enforcement).
 
-    Returns the number of rows deleted. Commits like every parquet
-    mutation, so a crash mid-rewrite keeps the old table; on a real
-    table format with ``partition_by``, only affected partitions need
-    rewriting.
+    Returns the number of rows deleted. Commits like every table
+    mutation, so a crash mid-rewrite keeps the old table; ``partition_by``
+    lays the rewritten table out by those columns.
     """
     _recover(spark, path)
     df = spark.read.parquet(path)

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.sources import writers
+
 
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -152,20 +154,17 @@ def neardedup_apply_batch(
         losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
         survivors = fresh.join(losers, "doc_id", "left_anti").persist()
         if not survivors.isEmpty():
-            (
-                survivors.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_path)
+            writers.overwrite_partitions(
+                survivors.withColumn("batch_id", F.lit(batch_id)),
+                out_path,
+                ["batch_id"],
             )
-            (
-                dedup_llm.band_hash_table(survivors, n)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(index_path)
+            writers.overwrite_partitions(
+                dedup_llm.band_hash_table(survivors, n).withColumn(
+                    "batch_id", F.lit(batch_id)
+                ),
+                index_path,
+                ["batch_id"],
             )
         survivors.unpersist()
     finally:
@@ -251,12 +250,8 @@ def health_apply_batch(
             F.hll_sketch_agg(F.col("_fp"), F.lit(12)).alias("fp_sketch"),
         )
     )
-    (
-        partial.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
+    writers.overwrite_partitions(
+        partial.withColumn("batch_id", F.lit(batch_id)), out_path, ["batch_id"]
     )
 
 

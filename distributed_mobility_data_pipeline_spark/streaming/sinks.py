@@ -3,12 +3,14 @@
 The production pattern the reference's batch MERGE implies but never
 streams: ``foreachBatch`` turns each micro-batch into a batch DataFrame
 and runs the idempotent upsert from sources.writers — exactly how a
-Structured Streaming job maintains a keyed table (Delta MERGE on a
-cluster, the parquet emulation here). Because merge_upsert is idempotent
+Structured Streaming job maintains a keyed table (the parquet MERGE
+emulation of Delta's). Because merge_upsert is idempotent
 on keys, a replayed micro-batch (at-least-once delivery) converges to
 the same table — the end-to-end-exactly-once recipe.
 
-Also the plain append sink with checkpointing, for log-shaped outputs.
+The other sinks write per-batch partials partitioned by batch_id through
+writers.overwrite_partitions, so a replayed micro-batch rewrites its own
+partition.
 """
 
 from __future__ import annotations
@@ -119,20 +121,16 @@ def stream_quality_gate(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         good, bad = quality_gate_split(batch_df, checks)
-        (
-            good.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(good_path)
+        writers.overwrite_partitions(
+            good.withColumn("batch_id", F.lit(batch_id)),
+            good_path,
+            ["batch_id"],
         )
-        (
+        writers.overwrite_partitions(
             bad.withColumn("violations", F.concat_ws(",", "violations"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(quarantine_path)
+            .withColumn("batch_id", F.lit(batch_id)),
+            quarantine_path,
+            ["batch_id"],
         )
 
     return (
@@ -175,17 +173,11 @@ def stream_drift_monitor(
         # batch_id-partitioned dynamic overwrite: a replayed batch
         # rewrites its own one-row partition instead of appending a
         # duplicate (batch_id, psi) record to the dashboard feed
-        (
-            psi.select(
-                "psi",
-                "n_buckets",
-                F.lit(n).alias("n_rows"),
-                F.lit(batch_id).alias("batch_id"),
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
+        writers.overwrite_partitions(
+            psi.select("psi", "n_buckets", F.lit(n).alias("n_rows"))
+            .withColumn("batch_id", F.lit(batch_id)),
+            out_path,
+            ["batch_id"],
         )
 
     return (
@@ -231,12 +223,8 @@ def histogram_apply_batch(
         hi,
         n_bins,
     )
-    (
-        partial.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
+    writers.overwrite_partitions(
+        partial.withColumn("batch_id", F.lit(batch_id)), out_path, ["batch_id"]
     )
 
 

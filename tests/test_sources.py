@@ -1,5 +1,5 @@
 """Reader/maintenance coverage (SURVEY.md §2.1 S1/S9/S11): CSV with
-explicit schema, schema'd JSONL scan, layout optimize."""
+explicit schema, schema'd JSONL scan, layout optimize, testdata views."""
 
 from __future__ import annotations
 
@@ -68,16 +68,6 @@ def test_optimize_layout_parquet(spark, tmp_path):
     assert back.select(F.sum("id")).collect()[0][0] == 499500
 
 
-def test_orc_read_with_filter(spark, tmp_path):
-    # distinct name from the write/read round-trip test below — a
-    # duplicate definition would shadow this one and kill its coverage
-    p = str(tmp_path / "orc_t")
-    spark.range(100).withColumn("k", F.col("id") % 5).write.orc(p)
-    df = readers.read_orc(spark, p)
-    assert df.count() == 100
-    assert df.filter(F.col("k") == 2).count() == 20
-
-
 def test_text_lines_reader(spark, tmp_path):
     p = tmp_path / "corpus.txt"
     p.write_text("alpha beta\ngamma\n\ndelta epsilon zeta")
@@ -98,34 +88,8 @@ def test_parquet_schema_evolution_read(spark, tmp_path):
     assert rows[2] == 9.5 and rows[1] is None  # old rows surface NULL
 
 
-def test_orc_roundtrip(spark, tmp_path):
-    from distributed_mobility_data_pipeline_spark.sources import writers
-
-    p = str(tmp_path / "orc_tbl")
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5)], "id long, name string, v double"
-    )
-    writers.write_orc(df, p)
-    back = readers.read_orc(spark, p)
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
-
-
-def test_orc_partitioned_write(spark, tmp_path):
-    from distributed_mobility_data_pipeline_spark.sources import writers
-
-    p = str(tmp_path / "orc_part")
-    df = spark.createDataFrame(
-        [(1, "x"), (2, "y"), (3, "x")], "id long, part string"
-    )
-    writers.write_orc(df, p, partition_by=["part"])
-    back = readers.read_orc(spark, p)
-    assert back.filter("part = 'x'").count() == 2
-
-
 def test_register_views_and_sql(spark, sf_dir):
-    from distributed_mobility_data_pipeline_spark.sources.catalog import register_views
-
-    names = register_views(spark, sf_dir)
+    names = readers.load_testdata(spark, sf_dir)
     assert "orders" in names and "events" in names
     n = spark.sql("SELECT count(*) AS c FROM orders").collect()[0]["c"]
     assert n == spark.read.parquet(f"{sf_dir}/orders.parquet").count()

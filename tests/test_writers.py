@@ -1,10 +1,12 @@
 """Write-path semantics (SURVEY.md §2.1 S3-S5): overwrite, append,
 MERGE idempotency — re-running the same upsert must not duplicate rows
 (the property batch_scoring.py:151-186 relies on) — and a parquet commit
-that leaves the old or the new table whichever step fails."""
+that leaves the old or the new table whichever step fails. No other
+package module writes a DataFrame itself."""
 
 from __future__ import annotations
 
+import ast
 import os
 
 import pandas as pd
@@ -467,3 +469,47 @@ def test_merge_into_unreadable_table_raises_and_keeps_files(spark, tmp_path):
     assert [(f.name, f.read_bytes()) for f in p.iterdir()] == [
         ("part-00000.parquet", b"not a parquet file")
     ]
+
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "distributed_mobility_data_pipeline_spark",
+)
+# The one module allowed to write tables, and the one listed exception:
+# ml/serving.py's JSONL event log, until ROADMAP open item 1 replaces it.
+_WRITE_SEAM = os.path.join("sources", "writers.py")
+_WRITE_SEAM_EXCEPTIONS = {os.path.join("ml", "serving.py")}
+
+
+def _direct_writes(tree):
+    """(line, attr) of every ``X.write`` read that is not itself called
+    (``DataFrame.write`` is a property; ``f.write(...)`` and MLlib's
+    ``model.write()`` are calls) and of every ``.saveAsTable`` or
+    ``.insertInto``."""
+    called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    return [
+        (n.lineno, n.attr)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and (
+            n.attr in ("saveAsTable", "insertInto")
+            or (n.attr == "write" and id(n) not in called)
+        )
+    ]
+
+
+def test_only_writers_module_writes_dataframes():
+    found = {}
+    for root, _, files in os.walk(_PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, _PKG)
+            if not name.endswith(".py") or rel == _WRITE_SEAM:
+                continue
+            with open(path, encoding="utf-8") as f:
+                hits = _direct_writes(ast.parse(f.read()))
+            if hits:
+                found[rel] = hits
+    assert set(found) == _WRITE_SEAM_EXCEPTIONS, (
+        f"write tables through sources/writers.py, not directly: {found}"
+    )
