@@ -103,28 +103,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc (exploded long format —
-    the scalable representation; no per-row arrays survive the shuffle).
-
-    The token array is materialized as its own projection before the
-    gram lambda: higher-order functions skip codegen subexpression
-    elimination, so inlining the split would re-run normalize+split per
-    gram (~50× per doc)."""
-    tokd = docs.select("doc_id", F.split(normalize_text(), " ").alias("_toks"))
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))  # short doc → whole text
-    return tokd.select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("shingle")
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:

@@ -103,7 +103,7 @@ def language_id(docs: DataFrame) -> DataFrame:
     every score is zero. Deterministic by construction, so it is
     oracle-checkable even on synthetic text where the true label is
     unrecoverable. Scoring and argmax live in _lang_scores/_argmax_lang,
-    shared with the reusable lang_pred() expression.
+    shared with plans/corpus health_per_doc.
 
     Three-stage projection (r19): tokens once, the four vote counts
     once, then the argmax over the count COLUMNS — the inlined form
@@ -157,9 +157,9 @@ def quality_parts(
 
 def _lang_scores(toks: Column | None = None) -> dict[str, Column]:
     """Per-language stopword-vote score expressions — the ONE place the
-    scoring rule lives (language_id and lang_pred both derive from it,
-    so the vote and tie rules can't desynchronize). ``toks`` as in
-    :func:`quality_parts`."""
+    scoring rule lives (language_id and plans/corpus health_per_doc both
+    derive from it, so the vote and tie rules can't desynchronize).
+    ``toks`` as in :func:`quality_parts`."""
     toks = _tokens() if toks is None else toks
     scores: dict[str, Column] = {}
     for lang, words in STOPWORDS.items():
@@ -176,13 +176,6 @@ def _argmax_lang(scores: dict[str, Column]) -> Column:
     for lang in STOPWORDS:  # insertion order = preference order on ties
         pred = pred.when(scores[lang] == best, F.lit(lang))
     return pred
-
-
-def lang_pred(toks: Column | None = None) -> Column:
-    """The language_id() argmax as one reusable column expression, for
-    single-scan compositions (plans/corpus corpus_health_by_source).
-    ``toks`` as in :func:`quality_parts`."""
-    return _argmax_lang(_lang_scores(toks))
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -322,7 +315,7 @@ def contamination_overlap(
     shingles (small side) broadcast against the corpus shingle table,
     overlap counted from the join, containment = overlap / benchmark
     shingle count. Same scale shape as the LSH dedup
-    (dedup_llm.shingles).
+    (dedup_llm.minhash_signatures).
 
     r19 (guide §2.4): each benchmark doc's shingle count is
     ``size(_grams)`` of the array-domain gram table — a map-side column

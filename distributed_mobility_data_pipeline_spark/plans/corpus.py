@@ -198,7 +198,7 @@ def corpus_health_by_source(docs: DataFrame) -> DataFrame:
 
     Single-scan by construction: every per-doc signal (fingerprint,
     quality keep flag, language vote, token count) is a column
-    EXPRESSION (text.quality_parts / text.lang_pred), not a joined
+    EXPRESSION (text.quality_parts / text._lang_scores), not a joined
     table, so 100 TB of documents is read exactly once and the output
     is source-cardinality-sized. All aggregates are integer counts;
     the ratios are single final divisions — hash-exact cross-engine."""

@@ -123,21 +123,6 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return _recover(spark, path)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, bucket_cols: list[str], n_buckets: int = 16
-) -> None:
-    """Bucketed managed table: joins/aggs on ``bucket_cols`` between
-    co-bucketed tables skip the shuffle entirely (pyspark guide:
-    'Bucketing'). The 100 TB answer for repeatedly-joined fact tables."""
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table)
-    )
-
-
 def overwrite_partitions(
     df: DataFrame, path: str, partition_by: list[str]
 ) -> None:

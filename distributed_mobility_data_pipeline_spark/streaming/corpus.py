@@ -285,22 +285,3 @@ def read_corpus_health(spark, path: str) -> DataFrame:
             / F.col("n_docs"),
         ),
     )
-
-
-def stream_health_sink(
-    docs: DataFrame, out_path: str, checkpoint_path: str
-):
-    """Continuously maintain the per-source corpus health dashboard
-    from a document stream (the streaming producer for
-    plans/corpus.corpus_health_by_source's measurement table).
-    Returns the started StreamingQuery."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        health_apply_batch(batch_df, batch_id, out_path)
-
-    return (
-        docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
-    )

@@ -8,7 +8,7 @@ import pytest
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 # Single shared insert for the scripts under tools/ — tool tests
-# (test_axis_tool.py) import them directly; duplicating this per test
+# (test_verify_tool.py) import them directly; duplicating this per test
 # grew sys.path on every run.
 sys.path.insert(0, os.path.join(_REPO_ROOT, "tools"))
 

@@ -3,8 +3,6 @@ two unconditional scale-killers — a non-broadcast CartesianProduct or
 row-at-a-time Python evaluation (BatchEvalPython). Arrow-batched pandas
 UDFs (ArrowEvalPython) and broadcast nested-loop joins (the
 broadcast-scalar / broadcast-probe crossJoin pattern) stay allowed.
-
-PLANS.md documents the plans we want; this test pins the floor.
 """
 
 from __future__ import annotations

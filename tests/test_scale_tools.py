@@ -1,12 +1,8 @@
-"""Scale-path tools: salted join equivalence, salted aggregation,
-bucketed tables eliminating the join shuffle."""
+"""Scale-path tools: salted join equivalence and salted aggregation."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from distributed_mobility_data_pipeline_spark.operators import skew
-from distributed_mobility_data_pipeline_spark.sources import writers
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -28,20 +24,3 @@ def test_salted_count_equals_plain_count(spark):
     plain = {(r.k, r["count"]) for r in df.groupBy("k").count().collect()}
     salted = {(r.k, r.n) for r in skew.salted_count(df, "k", "id").collect()}
     assert plain == salted
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    a = spark.createDataFrame([(i, float(i)) for i in range(100)], "k long, v double")
-    b = spark.createDataFrame([(i, f"n{i}") for i in range(100)], "k long, name string")
-    writers.write_bucketed(a, "bt_a", ["k"], 4)
-    writers.write_bucketed(b, "bt_b", ["k"], 4)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        joined = spark.table("bt_a").join(spark.table("bt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # co-bucketed → no shuffle
-        assert joined.count() == 100
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")

@@ -20,8 +20,6 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-
 
 def _norm(v):
     if v is None:
@@ -49,17 +47,12 @@ def table_hash(cols, rows):
     return h.hexdigest()
 
 
-def main(sf_dir: str | None = None, only: set[str] | None = None):
-    """Run the sweep. ``sf_dir``/``only`` may be passed explicitly
-    (tools/axis_sweep.py does) — the argv fallback serves direct CLI
-    use (ADVICE r18: explicit params beat monkeypatching SF_DIR)."""
+def main():
     import __spark_entry__ as entrymod
     from distributed_mobility_data_pipeline_spark.session import get_spark
 
-    global SF_DIR
-    if sf_dir is not None:
-        SF_DIR = sf_dir
-    only = set(sys.argv[2:]) if only is None else set(only)
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
     spark = get_spark("verify_local")
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
@@ -67,7 +60,7 @@ def main(sf_dir: str | None = None, only: set[str] | None = None):
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",
     ]:
-        p = os.path.join(SF_DIR, f"{t}.parquet")
+        p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
@@ -79,7 +72,7 @@ def main(sf_dir: str | None = None, only: set[str] | None = None):
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
