@@ -1,47 +1,73 @@
-"""Request-path model serving, Spark-first (reference src/api/app.py:243-378).
+"""Request-path model serving, on the driver (reference src/api/app.py:243-378).
 
-The reference serves predictions from a FastAPI process: one joblib
+The reference serves predictions from one FastAPI process: one joblib
 model in memory, a Python loop over request rows (app.py:305-345), a
 fallback formula when no artifact is loaded, and a prediction-event log
-appended as JSONL (app.py:219-239). Re-expressed for Spark:
+appended as JSONL (app.py:219-239). Here:
 
-- a request batch (one row or thousands) becomes a local-rows DataFrame
-  (SURVEY.md §2.1 S7) and is scored as ONE vectorized plan — MLlib
+- a request batch (one row or thousands) becomes a local relation built
+  from an Arrow table and is scored as ONE vectorized plan — MLlib
   ``model.transform`` when a fitted model is supplied, the expression
   fallback scorers (ml/scoring.py) otherwise, mirroring the reference's
-  local_artifact/fallback split;
-- the prediction-event log is a distributed JSONL append whose shape
-  matches what ml/monitoring.latency_stats reads back — same columns
-  the reference logs (request_id, task, model_used, latency_ms);
-- /health and /models become one-row DataFrames — the health of a Spark
-  serving job is its session + registered model table, not a process.
-
-Single-digit-millisecond point lookups are not Spark's job; this module
-is the batch/micro-batch request path (the reference's /predict/demand/
-batch is precisely this shape, app.py:305-345).
+  local_artifact/fallback split. The optimizer folds the fallback
+  projection into the local relation, so collecting a response runs no
+  Spark job. The Arrow table, not pandas, carries the rows: a pandas
+  frame only takes the Arrow route when the session enables it, and on
+  the other route a null lag arrives as NaN;
+- the prediction-event log is a driver-side JSONL append, one file per
+  process, in the shape ml/monitoring.latency_stats reads back (the
+  reference's request_id, task, model_used, latency_ms, plus endpoint
+  and status);
+- /health is a one-row DataFrame.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mobility_data_pipeline_spark.ml import scoring
 
-DEMAND_REQUEST_SCHEMA = (
-    "hour int, day_of_week int, is_weekend int, "
-    "n_lag_1 double, n_lag_7 double, avg_7r double"
+DEMAND_REQUEST_SCHEMA = pa.schema(
+    [("hour", pa.int32()), ("day_of_week", pa.int32()), ("is_weekend", pa.int32()),
+     ("n_lag_1", pa.float64()), ("n_lag_7", pa.float64()), ("avg_7r", pa.float64())]
 )
-SURGE_REQUEST_SCHEMA = "hour int, is_weekend int, n long, avg_7r double"
+SURGE_REQUEST_SCHEMA = pa.schema(
+    [("hour", pa.int32()), ("is_weekend", pa.int32()), ("n", pa.int64()),
+     ("avg_7r", pa.float64())]
+)
+
+
+def _requests(spark: SparkSession, rows: list[tuple], schema: pa.Schema) -> DataFrame:
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    return spark.createDataFrame(table)
 
 
 def demand_requests(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     """Local request rows → DataFrame (S7), the API's request body."""
-    return spark.createDataFrame(rows, DEMAND_REQUEST_SCHEMA)
+    return _requests(spark, rows, DEMAND_REQUEST_SCHEMA)
 
 
 def surge_requests(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    return spark.createDataFrame(rows, SURGE_REQUEST_SCHEMA)
+    return _requests(spark, rows, SURGE_REQUEST_SCHEMA)
+
+
+def _serve(requests, model, request_id, scorer, pred_col, out_col, digits) -> DataFrame:
+    if model is not None:
+        scored = model.transform(requests).withColumnRenamed("prediction", pred_col)
+        used = "local_artifact"
+    else:
+        scored, used = scorer(requests), "fallback"
+    return scored.select(
+        F.lit(request_id).alias("request_id"),
+        "*",
+        F.round(F.col(pred_col), digits).alias(out_col),
+        F.lit(used).alias("model_used"),
+    ).drop(pred_col)
 
 
 def serve_demand(
@@ -50,75 +76,43 @@ def serve_demand(
     """Score a demand request batch (app.py:268-345 semantics): model
     artifact if loaded, expression fallback otherwise; predictions
     rounded to 2 decimals like the reference's response."""
-    if model is not None:
-        scored = model.transform(requests).withColumnRenamed(
-            "prediction", "predicted_demand"
-        )
-        used = "local_artifact"
-    else:
-        scored = scoring.score_demand_expression(requests)
-        used = "fallback"
-    return scored.select(
-        F.lit(request_id).alias("request_id"),
-        "*",
-        F.round(F.col("predicted_demand"), 2).alias("predicted"),
-        F.lit(used).alias("model_used"),
-    ).drop("predicted_demand")
+    return _serve(requests, model, request_id, scoring.score_demand_expression,
+                  "predicted_demand", "predicted", 2)
 
 
 def serve_surge(
     requests: DataFrame, model=None, request_id: str = "batch-0"
 ) -> DataFrame:
     """Surge twin (app.py:347-378): clamped multiplier, 3 decimals."""
-    if model is not None:
-        scored = model.transform(requests).withColumnRenamed(
-            "prediction", "predicted_surge"
-        )
-        used = "local_artifact"
-    else:
-        scored = scoring.score_surge_expression(requests)
-        used = "fallback"
-    return scored.select(
-        F.lit(request_id).alias("request_id"),
-        "*",
-        F.round(F.col("predicted_surge"), 3).alias("predicted_surge_multiplier"),
-        F.lit(used).alias("model_used"),
-    ).drop("predicted_surge")
+    return _serve(requests, model, request_id, scoring.score_surge_expression,
+                  "predicted_surge", "predicted_surge_multiplier", 3)
 
 
 def log_prediction_events(
     responses: DataFrame, path: str, task: str, latency_ms: int,
     status: int = 200,
 ) -> None:
-    """Append prediction events as JSONL (app.py:219-239's log shape,
-    extended with the endpoint/status fields ml/monitoring.latency_stats
-    groups and error-counts on — the reference logs latency_ms only, so
-    without these the documented log→stats round-trip would fail on
-    UNRESOLVED_COLUMN). Distributed append — no driver-side row loop."""
-    (
-        responses.select(
-            "request_id",
-            F.lit(task).alias("task"),
-            F.lit(f"/predict/{task}").alias("endpoint"),
-            "model_used",
-            F.lit(latency_ms).alias("latency_ms"),
-            F.lit(status).alias("status"),
-        )
-        .write.mode("append")
-        .json(path)
+    """Append one JSON line per response row to ``<path>/part-<pid>.jsonl``
+    (app.py:219-239's log shape, extended with the endpoint/status fields
+    ml/monitoring.latency_stats groups and error-counts on). One write
+    per call; a line torn by a crash is dropped on read by
+    sources.readers.read_json_log."""
+    lines = "".join(
+        json.dumps({"request_id": r.request_id, "task": task, "endpoint": f"/predict/{task}",
+                    "model_used": r.model_used, "latency_ms": latency_ms, "status": status},
+                   separators=(",", ":"))
+        + "\n"
+        for r in responses.select("request_id", "model_used").collect()
     )
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, f"part-{os.getpid()}.jsonl"), "a", encoding="utf-8") as f:
+        f.write(lines)
 
 
 def health(spark: SparkSession, models: dict | None = None) -> DataFrame:
     """One-row health record (app.py:247-253)."""
     models = models or {}
     return spark.createDataFrame(
-        [
-            (
-                "ok",
-                models.get("demand") is not None,
-                models.get("surge") is not None,
-            )
-        ],
+        [("ok", models.get("demand") is not None, models.get("surge") is not None)],
         "status string, demand_model_loaded boolean, surge_model_loaded boolean",
     )

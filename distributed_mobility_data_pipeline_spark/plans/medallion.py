@@ -8,7 +8,7 @@ lazy plan: Catalyst sees silver's filters while planning bronze's scan
 (filter/projection pushdown across layer boundaries). ``run_medallion``
 with ``base_dir`` writes every layer through ``writers.write_overwrite``;
 nothing is materialized between the writes, so each written table
-re-runs the plan from the raw input (ROADMAP open item 4).
+re-runs the plan from the raw input (ROADMAP open item 2).
 
 Domain functions operate on the reference's trips schema
 (schemas.TRIPS_RAW / TRIPS_BRONZE; FIXTURES.md §1).
@@ -21,6 +21,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import exact_sum
 from distributed_mobility_data_pipeline_spark.operators import cleaning, dedup, star
 from distributed_mobility_data_pipeline_spark.sources import writers
 
@@ -140,9 +141,7 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
         silver_df.filter(F.col("status") == "completed")
         .groupBy("requested_date", "pickup_zone_id")
         .agg(
-            F.sum(F.col("fare_amount").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_revenue"),
+            exact_sum("fare_amount").alias("total_revenue"),
             F.avg("surge_multiplier").alias("avg_surge_multiplier"),
             F.avg("distance_km").alias("avg_distance_km"),
             F.count(F.lit(1)).alias("completed_trips"),
@@ -154,9 +153,7 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
         .groupBy("requested_date", "driver_key")
         .agg(
             F.count(F.lit(1)).alias("completed_trips"),
-            F.sum(F.col("fare_amount").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("driver_revenue"),
+            exact_sum("fare_amount").alias("driver_revenue"),
             F.avg("duration_min").alias("avg_trip_duration_min"),
         )
     )
@@ -171,9 +168,7 @@ def gold(silver_df: DataFrame) -> dict[str, DataFrame]:
         .groupBy("pickup_zone_id", "is_weekend")
         .agg(
             F.count(F.lit(1)).alias("total_trips"),
-            F.sum(F.col("fare_amount").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_revenue"),
+            exact_sum("fare_amount").alias("total_revenue"),
             F.avg("distance_km").alias("avg_distance_km"),
             F.avg("duration_min").alias("avg_duration_min"),
             F.countDistinct("driver_id").alias("active_drivers"),

@@ -220,7 +220,7 @@ def merge_upsert(
     table at ``path`` yet, ``source`` becomes the table.
 
     The emulation rewrites the whole table through the shared commit, so
-    its cost grows with the table, not the batch (ROADMAP open item 2).
+    its cost grows with the table, not the batch (ROADMAP open item 5).
     """
     _merge(spark, path, source, source, keys, partition_by)
 

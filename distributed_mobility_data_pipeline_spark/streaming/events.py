@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.functions.exact import exact_sum
 from distributed_mobility_data_pipeline_spark.schemas import EVENTS
 
 
@@ -84,7 +85,7 @@ def tumbling_hourly_counts(events: DataFrame, watermark: str = "2 hours") -> Dat
         src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("event_count"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("hour_ts"),
@@ -125,7 +126,7 @@ def session_windows(
         src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
         .select(
             "user_id",
@@ -224,9 +225,7 @@ def enriched_segment_counts(
         joined.groupBy("c_mktsegment", "event_type")
         .agg(
             F.count(F.lit(1)).alias("event_count"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
     )
 

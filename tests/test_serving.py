@@ -4,23 +4,37 @@ prediction-event log roundtrip, run store + best-run selection."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import os
 
-from distributed_mobility_data_pipeline_spark.ml import serving, tracking
+import pyspark.sql.functions as F
+import pytest
+from pyspark.ml import Pipeline
+from pyspark.ml.regression import LinearRegression
+
+from distributed_mobility_data_pipeline_spark.ml import monitoring, serving, tracking, training
 
 
 def test_serve_demand_fallback_batch(spark):
-    reqs = serving.demand_requests(
-        spark,
-        [(10, 2, 0, 4.0, 6.0, 5.0), (22, 6, 1, None, 2.0, 1.5)],
-    )
-    out = serving.serve_demand(reqs, request_id="r1")
-    rows = {r.hour: r for r in out.collect()}
-    # 0.5*4 + 0.3*6 + 0.2*5 + 1 = 5.8 ; null lag → coalesce 0
-    assert rows[10].predicted == 5.8
-    assert rows[22].predicted == round(0.3 * 2.0 + 0.2 * 1.5 + 1.0, 2)
-    assert rows[10].model_used == "fallback"
-    assert rows[10].request_id == "r1"
+    # a null lag must stay null, not NaN, whether or not the session
+    # enables Arrow for pandas conversion (the driver's session does not)
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            reqs = serving.demand_requests(
+                spark,
+                [(10, 2, 0, 4.0, 6.0, 5.0), (22, 6, 1, None, 2.0, 1.5)],
+            )
+            out = serving.serve_demand(reqs, request_id="r1")
+            rows = {r.hour: r for r in out.collect()}
+            # 0.5*4 + 0.3*6 + 0.2*5 + 1 = 5.8 ; null lag → coalesce 0
+            assert rows[10].predicted == 5.8
+            assert rows[22].predicted == round(0.3 * 2.0 + 0.2 * 1.5 + 1.0, 2)
+            assert rows[10].model_used == "fallback"
+            assert rows[10].request_id == "r1"
+    finally:
+        spark.conf.set(conf, before)
 
 
 def test_serve_surge_clamped(spark):
@@ -48,11 +62,55 @@ def test_prediction_log_roundtrip(spark, tmp_path):
     # the DOCUMENTED round-trip: the log this module writes must feed
     # ml/monitoring.latency_stats directly (it groups on endpoint and
     # error-counts on status — a log without them fails to resolve)
-    from distributed_mobility_data_pipeline_spark.ml import monitoring
-
     stats = monitoring.latency_stats(back).collect()
     assert len(stats) == 1 and stats[0].endpoint == "/predict/demand"
     assert stats[0].n_requests == 2 and stats[0].n_errors == 0
+
+
+@pytest.mark.parametrize(
+    "task, make, serve, row",
+    [
+        ("demand", serving.demand_requests, serving.serve_demand, (10, 2, 0, 4.0, None, 5.0)),
+        ("surge", serving.surge_requests, serving.serve_surge, (8, 0, 100, 1.0)),
+    ],
+)
+def test_fallback_request_runs_no_spark_job(spark, tmp_path, task, make, serve, row):
+    """Request frame → fallback scoring → collect → event log, as the
+    /predict path runs it, stays on the driver: the frame is a local
+    relation the scoring projection folds into, and the log is a
+    driver-side append to one file per process."""
+    sc, log, group = spark.sparkContext, str(tmp_path / "log"), f"no-job-{task}"
+    sc.setJobGroup(group, "fallback request")
+    try:
+        for n in (1, 1_000):
+            resp = serve(make(spark, [row] * n), request_id=f"{task}-{n}")
+            assert len(resp.collect()) == n
+            serving.log_prediction_events(resp, log, task, latency_ms=n)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len([f for f in os.listdir(log) if not f.startswith((".", "_"))]) == 1
+    (stats,) = monitoring.latency_stats(spark.read.json(log)).collect()
+    assert stats.endpoint == f"/predict/{task}" and stats.n_requests == 1_001
+
+
+def test_serve_demand_with_fitted_model(spark):
+    """The MLlib-model branch: a fitted pipeline scores the request and
+    its prediction, rounded to 2 decimals, is the response."""
+    numeric = ["n_lag_1", "n_lag_7", "avg_7r"]
+    rows = [(h, 1, 0, 1.0 * h, 2.0 * h, 0.5 * h + 1) for h in range(1, 9)]
+    train = serving.demand_requests(spark, rows).withColumn(
+        "label", F.col("n_lag_1") * 0.7 + F.col("avg_7r") + F.lit(0.333)
+    )
+    stages = training.preprocessing_pipeline([], numeric).getStages()
+    fitted = Pipeline(stages=[*stages, LinearRegression()]).fit(train)
+    req = serving.demand_requests(spark, rows[:3] + [(4, 2, 1, 0.25, 3.5, 7.125)])
+    out = serving.serve_demand(req, model=fitted, request_id="m-1").collect()
+    want = {r.hour: round(r.prediction, 2) for r in fitted.transform(req).collect()}
+    assert {r.model_used for r in out} == {"local_artifact"}
+    assert {r.hour: r.predicted for r in out} == want
+    assert len(out) == 4 and "predicted_demand" not in out[0].asDict()
 
 
 def test_health_row(spark):

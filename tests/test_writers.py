@@ -475,10 +475,8 @@ _PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "distributed_mobility_data_pipeline_spark",
 )
-# The one module allowed to write tables, and the one listed exception:
-# ml/serving.py's JSONL event log, until ROADMAP open item 1 replaces it.
+# The one module allowed to write tables.
 _WRITE_SEAM = os.path.join("sources", "writers.py")
-_WRITE_SEAM_EXCEPTIONS = {os.path.join("ml", "serving.py")}
 
 
 def _direct_writes(tree):
@@ -510,6 +508,6 @@ def test_only_writers_module_writes_dataframes():
                 hits = _direct_writes(ast.parse(f.read()))
             if hits:
                 found[rel] = hits
-    assert set(found) == _WRITE_SEAM_EXCEPTIONS, (
+    assert not found, (
         f"write tables through sources/writers.py, not directly: {found}"
     )
