@@ -54,7 +54,8 @@ from distributed_mobility_data_pipeline_spark.ml import training as mltrain
 from distributed_mobility_data_pipeline_spark.operators import windows as win_ops
 from distributed_mobility_data_pipeline_spark.sources.readers import (
     load_testdata,
-    read_events,
+    read_events_stream,
+    read_testdata,
 )
 from distributed_mobility_data_pipeline_spark.sources.writers import (
     morton_key_2d,
@@ -71,29 +72,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Timestamp formatting/truncation is session-TZ sensitive; the DuckDB
     # oracle runs in UTC, so pin it regardless of the caller's session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Per-SESSION scan-plan cache (r19 optimization, guide §7.3/§6):
-    # every spark.read.parquet call re-resolves the source and re-reads
-    # footers (~0.1-0.25 s of driver-side work), and several queries
-    # scan 3-5 tables — this is the repeated-listing cost a catalog (or
-    # Spark's own filesourcePartitionFileCacheSize for catalog tables)
-    # exists to avoid. The cache holds only the LAZY reader DataFrame —
-    # a plan, never data or results — and lives on the session object,
-    # so every action still computes from the parquet inputs and a new
-    # session starts cold.
+    # Per-SESSION scan-plan cache (r19 optimization, guide §7.3/§6): a
+    # testdata read plans with its declared schema, so no footer is read,
+    # but each read still re-resolves the source and lists its files, and
+    # several queries scan 3-5 tables. The cache holds only the LAZY
+    # reader DataFrame — a plan, never data or results — and lives on the
+    # session object, so every action still computes from the parquet
+    # inputs and a new session starts cold.
     cache = getattr(spark, "_graft_scan_cache", None)
     if cache is None:
         cache = {}
         spark._graft_scan_cache = cache
     key = (sf_dir, name)
-    df = cache.get(key)
-    if df is None:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if name == "events":
-            df = read_events(spark, path)  # ns timestamps need special read
-        else:
-            df = spark.read.parquet(path)
-        cache[key] = df
-    return df
+    if key not in cache:
+        cache[key] = read_testdata(spark, sf_dir, name)
+    return cache[key]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -305,7 +298,7 @@ def _stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     view = "_stateful_totals_drv"
     spark.catalog.dropTempView(view)
-    src = stream_ops.read_events_stream(spark, path, max_files_per_trigger=1)
+    src = read_events_stream(spark, path, max_files_per_trigger=1)
     q = (
         stateful_ops.running_totals_stream(src)
         .writeStream.outputMode("update")

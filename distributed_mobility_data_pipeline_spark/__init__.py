@@ -9,7 +9,9 @@ similarity search, text analysis, multimodal plumbing).
 Design principles (SURVEY.md §7):
 - DataFrame/SQL everywhere; operators are pure ``DataFrame -> DataFrame``
   functions composed lazily so Catalyst optimizes whole pipelines.
-- Explicit StructType schemas at IO boundaries (no inferSchema in prod).
+- Explicit StructType schemas at IO boundaries: the driver's testdata
+  is read with declared schemas; tables the package writes are still
+  read by inference (ROADMAP item 4).
 - Built-in ``pyspark.sql.functions`` in the hot path; Arrow-batched
   pandas UDFs only for model inference / embedding kernels.
 - AQE + broadcast hints + partition columns for 100 TB posture.

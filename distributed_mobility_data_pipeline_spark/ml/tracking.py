@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mobility_data_pipeline_spark.sources import writers
+from distributed_mobility_data_pipeline_spark.sources import readers, writers
 
 RUN_SCHEMA = (
     "run_name string, params map<string,string>, "
@@ -46,7 +46,7 @@ def log_run(
 def runs(spark: SparkSession, store: str) -> DataFrame:
     """All runs, one metric per row (exploded for SQL-friendly reads)."""
     return (
-        spark.read.parquet(store)
+        readers.read_parquet(spark, store)
         .select("run_name", "logged_at", F.explode("metrics").alias("metric", "value"))
     )
 

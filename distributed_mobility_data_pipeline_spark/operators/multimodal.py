@@ -1,7 +1,9 @@
 """Multimodal column plumbing (north-star extension, BASELINE.json:
 "multimodal columns").
 
-Media are opaque ``binary`` payloads + typed metadata (schemas.MEDIA).
+Media are opaque ``binary`` payloads + typed metadata (``media_id``,
+``kind``, ``payload``, ``mime``), synthesized from the documents table
+(FIXTURES.md §2) by ``media_from_documents``.
 The Spark-side plumbing — schema, partition-friendly long format,
 Arrow-batched ``mapInPandas`` operator shape — is real and tested; the
 actual codec work (image decode / resize, audio feature extraction,

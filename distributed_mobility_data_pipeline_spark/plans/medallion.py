@@ -10,8 +10,8 @@ with ``base_dir`` writes every layer through ``writers.write_overwrite``;
 nothing is materialized between the writes, so each written table
 re-runs the plan from the raw input (ROADMAP open item 2).
 
-Domain functions operate on the reference's trips schema
-(schemas.TRIPS_RAW / TRIPS_BRONZE; FIXTURES.md §1).
+Domain functions operate on the reference's trips schema, raw and with
+bronze's audit columns (FIXTURES.md §1).
 """
 
 from __future__ import annotations

@@ -1,51 +1,63 @@
-"""Explicit StructType contracts.
+"""The driver's testdata tables (TESTDATA.md), one StructType each.
 
-The reference infers schema at the CSV boundary (bronze_loader.py:17-19)
-and keeps every downstream schema implicit. Here every layer has an
-explicit contract: deterministic reads (no inference pass over 100 TB)
-and self-documenting operator signatures (SURVEY.md §1.2).
+The reference infers schema at the CSV boundary (bronze_loader.py:17-19).
+``sources/readers.read_testdata`` reads every testdata table with its
+schema here instead, so a read plans without an inference job. Each
+schema equals what Spark infers from the files, field by field (checked
+by tests/test_sources.py): the lineitem and orders dates are µs
+timestamps with no UTC adjustment, which Spark reads as timestamp_ntz.
+``EVENTS`` is what ``read_events`` returns: ``ts`` is a timestamp
+whichever of its three encodings the file holds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# ---------------------------------------------------------------------------
-# Reference domain: trips (generate_all.py:63-133, bronze casts 22-26)
-# ---------------------------------------------------------------------------
-
-TRIPS_RAW = T.StructType(
+REGION = T.StructType(
     [
-        T.StructField("trip_id", T.LongType(), False),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("driver_id", T.LongType(), True),
-        T.StructField("pickup_zone_id", T.LongType(), True),
-        T.StructField("dropoff_zone_id", T.LongType(), True),
-        T.StructField("requested_at", T.TimestampType(), True),
-        T.StructField("started_at", T.TimestampType(), True),
-        T.StructField("completed_at", T.TimestampType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("distance_km", T.DoubleType(), True),
-        T.StructField("duration_min", T.DoubleType(), True),
-        T.StructField("surge_multiplier", T.DoubleType(), True),
-        T.StructField("fare_amount", T.DoubleType(), True),
-        T.StructField("payment_method", T.StringType(), True),
+        T.StructField("r_regionkey", T.IntegerType(), False),
+        T.StructField("r_name", T.StringType(), True),
     ]
 )
 
-# Bronze = raw + audit columns (bronze_loader.py:30-35)
-TRIPS_BRONZE = T.StructType(
-    TRIPS_RAW.fields
-    + [
-        T.StructField("ingested_at", T.TimestampType(), False),
-        T.StructField("source_file", T.StringType(), True),
-        T.StructField("requested_date", T.DateType(), True),
+NATION = T.StructType(
+    [
+        T.StructField("n_nationkey", T.IntegerType(), False),
+        T.StructField("n_name", T.StringType(), True),
+        T.StructField("n_regionkey", T.IntegerType(), True),
     ]
 )
 
-# ---------------------------------------------------------------------------
-# Driver testdata (TESTDATA.md) — declared so reads never infer
-# ---------------------------------------------------------------------------
+CUSTOMER = T.StructType(
+    [
+        T.StructField("c_custkey", T.LongType(), False),
+        T.StructField("c_name", T.StringType(), True),
+        T.StructField("c_nationkey", T.IntegerType(), True),
+        T.StructField("c_acctbal", T.DoubleType(), True),
+        T.StructField("c_mktsegment", T.StringType(), True),
+    ]
+)
+
+SUPPLIER = T.StructType(
+    [
+        T.StructField("s_suppkey", T.LongType(), False),
+        T.StructField("s_name", T.StringType(), True),
+        T.StructField("s_nationkey", T.IntegerType(), True),
+        T.StructField("s_acctbal", T.DoubleType(), True),
+    ]
+)
+
+PART = T.StructType(
+    [
+        T.StructField("p_partkey", T.LongType(), False),
+        T.StructField("p_name", T.StringType(), True),
+        T.StructField("p_brand", T.StringType(), True),
+        T.StructField("p_type", T.StringType(), True),
+        T.StructField("p_size", T.IntegerType(), True),
+        T.StructField("p_retailprice", T.DoubleType(), True),
+    ]
+)
 
 EVENTS = T.StructType(
     [
@@ -70,7 +82,7 @@ LINEITEM = T.StructType(
         T.StructField("l_tax", T.DoubleType(), True),
         T.StructField("l_returnflag", T.StringType(), True),
         T.StructField("l_linestatus", T.StringType(), True),
-        T.StructField("l_shipdate", T.TimestampType(), True),
+        T.StructField("l_shipdate", T.TimestampNTZType(), True),
     ]
 )
 
@@ -80,7 +92,7 @@ ORDERS = T.StructType(
         T.StructField("o_custkey", T.LongType(), True),
         T.StructField("o_orderstatus", T.StringType(), True),
         T.StructField("o_totalprice", T.DoubleType(), True),
-        T.StructField("o_orderdate", T.TimestampType(), True),
+        T.StructField("o_orderdate", T.TimestampNTZType(), True),
         T.StructField("o_orderpriority", T.StringType(), True),
     ]
 )
@@ -103,29 +115,16 @@ EMBEDDINGS = T.StructType(
     ]
 )
 
-# Multimodal extension: opaque binary payload + typed metadata
-# (north-star; the decode step is stubbed, the plumbing is real).
-MEDIA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+# name -> schema, in the order the driver lists the tables
+TESTDATA_TABLES = {
+    "region": REGION,
+    "nation": NATION,
+    "customer": CUSTOMER,
+    "supplier": SUPPLIER,
+    "part": PART,
+    "orders": ORDERS,
+    "lineitem": LINEITEM,
+    "events": EVENTS,
+    "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+}

@@ -1,4 +1,5 @@
-"""Readers (SURVEY.md §2.1 S1/S2/S7/S9).
+"""Readers (SURVEY.md §2.1 S1/S2/S7/S9): the one module that reads
+tables.
 
 Re-expresses the reference's scan surface:
 - S1 CSV scan (bronze_loader.py:15-20) — but with an explicit schema; a
@@ -7,6 +8,14 @@ Re-expresses the reference's scan surface:
   package's one table format (sources/writers.py writes it).
 - S9 JSONL API-log scan (model_monitoring.py:136-152 reads the log in
   plain Python; here it is a schema'd distributed ``spark.read.json``).
+
+The driver's testdata tables are read with their ``schemas`` StructType
+(``read_testdata``), so they plan without an inference job; the one
+inference left is ``_events_schema``'s probe of the events file's
+timestamp encoding, shared by the batch and the stream reader. Tables
+the package writes itself are still read by inference (``read_parquet``).
+``tests/test_writers.py`` fails when another package module, or
+``__spark_entry__.py``, reads a table itself.
 """
 
 from __future__ import annotations
@@ -67,51 +76,96 @@ def read_json_log(
     )
 
 
-def read_events(spark: SparkSession, path: str) -> DataFrame:
-    """Read the driver's `events` table, normalizing `ts` to TimestampType
-    whatever the on-disk parquet encoding:
+def _events_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema to read the events table at ``path`` with. Its ``ts`` has
+    shipped in three parquet encodings:
 
-    - TIMESTAMP(NANOS): Spark's vectorized reader rejects it
-      (PARQUET_TYPE_ILLEGAL) — read nanos as long, floor to µs (same value
-      DuckDB produces casting TIMESTAMP_NS → TIMESTAMP).
-    - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 surfaces it as
-      TIMESTAMP_NTZ — cast to TimestampType (value-preserving: the session
-      timezone is pinned UTC, matching the DuckDB oracle).
-    - TIMESTAMP(MICROS, UTC): already TimestampType, pass through.
+    - TIMESTAMP(MICROS), with or without UTC adjustment: ``schemas.EVENTS``
+      reads both as TimestampType (the same instants under the pinned-UTC
+      session, matching the DuckDB oracle).
+    - TIMESTAMP(NANOS): Spark rejects it as a timestamp
+      (PARQUET_TYPE_ILLEGAL) but reads it as ``ts long``; ``_ts_micros``
+      then floors ns to µs, the value DuckDB produces casting
+      TIMESTAMP_NS → TIMESTAMP.
 
-    Downstream operators (unix_micros, watermarks, asof) can therefore
-    assume `ts` is always TimestampType."""
+    Only inferring the ns file's schema needs ``nanosAsLong``, so the
+    probe sets it around one inferred read (one Spark job; a read with
+    an explicit schema runs none)."""
     prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        df = spark.read.parquet(path)
+        ts = spark.read.parquet(path).schema["ts"].dataType
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if not isinstance(ts, T.LongType):
+        return schemas.EVENTS
+    return T.StructType(
+        [T.StructField("ts", ts) if f.name == "ts" else f for f in schemas.EVENTS]
+    )
+
+
+def _ts_micros(df: DataFrame) -> DataFrame:
+    """Floor an ns ``ts long`` to a µs timestamp; other frames pass."""
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """Read the driver's `events` table with ``ts`` as TimestampType,
+    whatever its on-disk encoding (``_events_schema``), so downstream
+    operators (unix_micros, watermarks, asof) can rely on it."""
+    return _ts_micros(spark.read.schema(_events_schema(spark, path)).parquet(path))
+
+
+def _read_stream(
+    spark: SparkSession, path: str, schema: T.StructType, max_files_per_trigger: int
+) -> DataFrame:
+    if path.endswith(".parquet"):
+        # the file stream source needs a directory or glob, not one file
+        path = path[: -len("t")] + "*"
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )
+
+
+def read_events_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """File-source stream of events (parquet file, dir or glob), with
+    ``ts`` normalized as :func:`read_events` does."""
+    schema = _events_schema(spark, path)
+    return _ts_micros(_read_stream(spark, path, schema, max_files_per_trigger))
+
+
+def read_documents_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """File-source stream of the documents table (parquet file, dir or glob)."""
+    return _read_stream(spark, path, schemas.DOCUMENTS, max_files_per_trigger)
+
+
+def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``<sf_dir>/<name>.parquet`` with its ``schemas`` StructType
+    (events through :func:`read_events`)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        return read_events(spark, path)
+    return spark.read.schema(schemas.TESTDATA_TABLES[name]).parquet(path)
 
 
 def load_testdata(
     spark: SparkSession, sf_dir: str, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:
-    """Load the driver's parquet tables from ``sf_dir`` and register each
-    as a temp view (so both DataFrame and ``spark.sql`` paths work);
-    tables missing from ``sf_dir`` are skipped. ``events`` goes through
-    :func:`read_events`, so its ts column is normalized to TimestampType
-    regardless of the file's timestamp encoding (a plain parquet read
-    leaves µs data as timestamp_ntz and fails outright on the nanos
-    encoding FIXTURES.md documents)."""
+    """Read the driver's tables (all of them when ``tables`` is None) from
+    ``sf_dir`` with :func:`read_testdata` and register each as a temp view
+    (so both DataFrame and ``spark.sql`` paths work); tables missing from
+    ``sf_dir`` are skipped."""
     out: dict[str, DataFrame] = {}
-    for name in tables or schemas.TESTDATA_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            df = read_events(spark, p) if name == "events" else (
-                spark.read.parquet(p)
-            )
-            df.createOrReplaceTempView(name)
-            out[name] = df
+    for name in schemas.TESTDATA_TABLES if tables is None else tables:
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            out[name] = read_testdata(spark, sf_dir, name)
+            out[name].createOrReplaceTempView(name)
     return out

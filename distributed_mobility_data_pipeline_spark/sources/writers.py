@@ -8,7 +8,8 @@ the merge keys, union the source, rewrite — idempotent for re-runs with
 the same keys, which is the property batch_scoring.py:161-186 relies on.
 Streaming sinks and the ML run store write through these functions too;
 ``tests/test_writers.py`` fails when another package module writes a
-DataFrame itself (the serving JSONL event log is the one listed exception).
+DataFrame itself; there are no exceptions (the serving event log is a
+driver-side file append, not a DataFrame write).
 
 Commit protocol. Every table mutation (write_overwrite,
 merge_upsert, apply_cdc_batch, delete_where, optimize_layout) ends in
@@ -31,6 +32,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from distributed_mobility_data_pipeline_spark.sources import readers
 
 _STAGING = "._tmp_commit"
 _BAK = "._bak"
@@ -162,7 +165,7 @@ def optimize_layout(
     like Delta's ZORDER, not just lexicographic — so predicates on ANY
     of the columns prune row groups."""
     _recover(spark, path)
-    df = spark.read.parquet(path)
+    df = readers.read_parquet(spark, path)
     # Partition-count heuristic without touching .rdd (which forces an RDD
     # materialization of the scan): compaction targets ~4 input splits per
     # output file, derived from file sizes in the scan relation's metadata.
@@ -240,7 +243,7 @@ def _merge(
     commit. With no table yet, ``new_rows`` alone is the table; a table
     that is there is read once, and a read error propagates."""
     if _recover(spark, path):
-        target = spark.read.parquet(path)
+        target = readers.read_parquet(spark, path)
         src_keys = key_rows.select(*keys).dropDuplicates(keys).alias("_mrg_s")
         cond = reduce(
             lambda a, b: a & b,
@@ -336,7 +339,7 @@ def delete_where(
     lays the rewritten table out by those columns.
     """
     _recover(spark, path)
-    df = spark.read.parquet(path)
+    df = readers.read_parquet(spark, path)
     kept = df.filter(~predicate | predicate.isNull())
     # one aggregate, not two full-scan count()s: rows are deleted iff
     # the predicate is TRUE (NULL keeps the row, matching the filter)

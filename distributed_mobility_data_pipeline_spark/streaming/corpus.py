@@ -12,33 +12,15 @@ forever-crawl; in practice bounded with ``dropDuplicatesWithinWatermark``
 when re-crawls cluster in time (the variant exposed here too). At
 100 TB state lives in RocksDB on executors, keyed by the 32-byte hash —
 the same state-size argument as streaming_dedup on event_id
-(streaming/events.py:138).
+(streaming/events.streaming_dedup).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from distributed_mobility_data_pipeline_spark.sources import writers
-
-
-DOCS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def read_documents_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream of the documents table (parquet dir/glob)."""
-    if path.endswith(".parquet"):
-        path = path[: -len("t")] + "*"
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+from distributed_mobility_data_pipeline_spark.sources import readers, writers
 
 
 def with_fingerprint(docs: DataFrame) -> DataFrame:
@@ -82,7 +64,7 @@ def dedup_stream_within_watermark(
     close to the original and state must not grow forever.
 
     ``ts_col`` is the INGEST event-time column the watermark advances
-    on. The raw documents table (DOCS_SCHEMA) carries no timestamp, so
+    on. The raw documents table (schemas.DOCUMENTS) carries no timestamp, so
     an ingest pipeline stamps one (e.g. ``withColumn("ingested_at",
     F.current_timestamp())``) before this stage; a missing column is
     rejected up front with the composition hint rather than a bare
@@ -127,7 +109,7 @@ def neardedup_apply_batch(
         bands = dedup_llm.band_hash_table(batch, n)
         try:
             idx = (
-                spark.read.parquet(index_path)
+                readers.read_parquet(spark, index_path)
                 .filter(F.col("batch_id") < F.lit(batch_id))
                 .select("band", "bhash")
             )
@@ -262,7 +244,7 @@ def read_corpus_health(spark, path: str) -> DataFrame:
     from distributed_mobility_data_pipeline_spark.plans.corpus import health_langs
 
     merged = (
-        spark.read.parquet(path)
+        readers.read_parquet(spark, path)
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -9,8 +9,9 @@ stream.
 
 Every transformation is defined on a plain DataFrame, so the SAME
 function body serves batch and streaming (Spark's unified API); tests
-run them both ways and check batch≡stream equivalence. File source
-here; on a cluster the source swaps to Kafka with no operator change.
+run them both ways and check batch≡stream equivalence. The source is
+a file stream (sources/readers.read_events_stream); on a cluster it
+swaps to Kafka with no operator change.
 
 Watermarks bound state: at 100 TB/day the tumbling-count state is
 (#keys × #open-windows) rows, evicted as the watermark passes.
@@ -22,59 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mobility_data_pipeline_spark.functions.exact import exact_sum
-from distributed_mobility_data_pipeline_spark.schemas import EVENTS
-
-
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream of events (parquet dir), normalized so `ts` is
-    always TimestampType regardless of the on-disk encoding.
-
-    The file stream source needs an explicit schema, so we probe the
-    parquet footer once with a batch read (metadata-only: the schema comes
-    from the footer, no data scan) and branch:
-
-    - ts read as bigint → legacy TIMESTAMP(NANOS) data: stream with
-      ``ts long`` under nanosAsLong, then floor ns → µs.
-    - ts read as timestamp_ntz → TIMESTAMP(MICROS, isAdjustedToUTC=false):
-      stream with ``ts timestamp_ntz`` and cast to timestamp
-      (value-preserving under the pinned-UTC session).
-    - otherwise → already UTC-adjusted micros: stream with ``ts timestamp``.
-    """
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        ts_type = dict(spark.read.parquet(path).dtypes).get("ts")
-    finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-
-    base = "event_id long, {ts}, user_id long, event_type string, value double, props string"
-    if path.endswith(".parquet"):
-        # the file stream source needs a directory or glob, not one file
-        path = path[: -len("t")] + "*"
-
-    if ts_type == "bigint":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = (
-                spark.readStream.schema(base.format(ts="ts long"))
-                .option("maxFilesPerTrigger", max_files_per_trigger)
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-
-    ts_field = "ts timestamp_ntz" if ts_type == "timestamp_ntz" else "ts timestamp"
-    df = (
-        spark.readStream.schema(base.format(ts=ts_field))
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-    if ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def tumbling_hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

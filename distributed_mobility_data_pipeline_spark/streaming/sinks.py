@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from distributed_mobility_data_pipeline_spark.sources import writers
+from distributed_mobility_data_pipeline_spark.sources import readers, writers
 
 
 def stream_merge_upsert(
@@ -236,7 +236,7 @@ def read_daily_histograms(spark, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(path)
+        readers.read_parquet(spark, path)
         .groupBy("day", "bin")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )

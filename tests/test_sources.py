@@ -4,10 +4,12 @@ explicit schema, schema'd JSONL scan, layout optimize, testdata views."""
 from __future__ import annotations
 
 import json
+import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import types as T
 
+from distributed_mobility_data_pipeline_spark import schemas
 from distributed_mobility_data_pipeline_spark.ml import monitoring
 from distributed_mobility_data_pipeline_spark.sources import readers, writers
 
@@ -97,3 +99,52 @@ def test_register_views_and_sql(spark, sf_dir):
     assert dict(spark.sql("SELECT * FROM events").dtypes)["ts"] in (
         "timestamp",
     )
+    # an empty table list registers nothing
+    spark.catalog.dropTempView("region")
+    assert readers.load_testdata(spark, sf_dir, []) == {}
+    assert not spark.catalog.tableExists("region")
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
+def test_declared_schemas_match_the_files(spark, sf_dir):
+    """Each declared testdata schema is what Spark infers from the file,
+    field by field. A read with a wrong declared type fails, but one with
+    a missing or misnamed column reads it as NULL without an error."""
+    names = sorted(
+        f.removesuffix(".parquet")
+        for f in os.listdir(sf_dir)
+        if f.endswith(".parquet")
+    )
+    assert names == sorted(schemas.TESTDATA_TABLES)
+    for name in names:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if name == "events":
+            got = readers.read_events(spark, path).schema
+        else:
+            got = spark.read.parquet(path).schema
+        assert _fields(got) == _fields(schemas.TESTDATA_TABLES[name]), name
+
+
+def test_testdata_reads_run_no_job_but_the_events_probe(spark, sf_dir):
+    """A testdata read plans with its declared schema, so it runs no Spark
+    job; ``read_events`` runs one, the inference of ts's encoding."""
+    sc = spark.sparkContext
+
+    def n_jobs(group, read, *args):
+        sc.setJobGroup(group, "testdata reads")
+        try:
+            read(*args)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    tables = [n for n in schemas.TESTDATA_TABLES if n != "events"]
+    assert len(tables) == 9
+    for name in tables:
+        assert n_jobs(f"read-{name}", readers.read_testdata, spark, sf_dir, name) == 0
+    events = os.path.join(sf_dir, "events.parquet")
+    assert n_jobs("read-events", readers.read_events, spark, events) == 1

@@ -7,14 +7,17 @@ import os
 
 import pyspark.sql.functions as F
 
-from distributed_mobility_data_pipeline_spark.sources.readers import read_events
+from distributed_mobility_data_pipeline_spark.sources.readers import (
+    read_events,
+    read_events_stream,
+)
 from distributed_mobility_data_pipeline_spark.streaming import events as se
 from distributed_mobility_data_pipeline_spark.streaming.stateful import running_totals_stream
 
 
 def test_stateful_running_totals(spark, sf_dir):
     path = os.path.join(sf_dir, "events.parquet")
-    stream_src = se.read_events_stream(spark, path)
+    stream_src = read_events_stream(spark, path)
     q = (
         running_totals_stream(stream_src)
         .writeStream.outputMode("update")

@@ -9,7 +9,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from distributed_mobility_data_pipeline_spark.sources.readers import read_events
+from distributed_mobility_data_pipeline_spark.sources.readers import (
+    read_events,
+    read_events_stream,
+)
 from distributed_mobility_data_pipeline_spark.streaming import events as se
 
 
@@ -19,7 +22,7 @@ def _events_path(sf_dir):
 
 def test_tumbling_stream_equals_batch(spark, sf_dir):
     batch = se.tumbling_hourly_counts(read_events(spark, _events_path(sf_dir)))
-    stream_src = se.read_events_stream(spark, _events_path(sf_dir))
+    stream_src = read_events_stream(spark, _events_path(sf_dir))
     assert stream_src.isStreaming
     streamed = se.run_stream_to_memory(
         spark,
@@ -33,7 +36,7 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
 
 
 def test_streaming_dedup_bounded(spark, sf_dir):
-    stream_src = se.read_events_stream(spark, _events_path(sf_dir))
+    stream_src = read_events_stream(spark, _events_path(sf_dir))
     deduped = se.streaming_dedup(stream_src)
     q = (
         deduped.writeStream.outputMode("append")

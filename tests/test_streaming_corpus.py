@@ -8,6 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark import schemas
+from distributed_mobility_data_pipeline_spark.sources.readers import read_documents_stream
 from distributed_mobility_data_pipeline_spark.streaming import corpus as sc
 from distributed_mobility_data_pipeline_spark.streaming.events import run_stream_to_memory
 
@@ -19,7 +21,7 @@ def _docs_path(sf_dir):
 def test_stream_dedup_matches_batch(spark, sf_dir):
     batch = sc.dedup_stream_exact(spark.read.parquet(_docs_path(sf_dir)))
     stream = sc.dedup_stream_exact(
-        sc.read_documents_stream(spark, _docs_path(sf_dir))
+        read_documents_stream(spark, _docs_path(sf_dir))
     )
     out = run_stream_to_memory(spark, stream, "corpus_dedup", "append")
     assert sorted(r.fingerprint for r in out.collect()) == sorted(
@@ -30,16 +32,16 @@ def test_stream_dedup_matches_batch(spark, sf_dir):
 def test_stream_dedup_suppresses_reingestion(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "alpha beta", "en", "s0", 10), (2, "gamma delta", "en", "s0", 11)],
-        sc.DOCS_SCHEMA,
+        schemas.DOCUMENTS,
     )
     redo = spark.createDataFrame(
         [(3, "Alpha  Beta", "en", "s1", 11), (4, "epsilon", "en", "s1", 7)],
-        sc.DOCS_SCHEMA,
+        schemas.DOCUMENTS,
     )  # doc 3 normalizes to doc 1's content
     base.write.parquet(str(tmp_path / "f1.parquet"))
     redo.write.parquet(str(tmp_path / "f2.parquet"))
     stream = sc.dedup_stream_exact(
-        sc.read_documents_stream(spark, str(tmp_path) + "/*")
+        read_documents_stream(spark, str(tmp_path) + "/*")
     )
     out = run_stream_to_memory(spark, stream, "corpus_reingest", "append")
     rows = out.select("doc_id").collect()
@@ -99,14 +101,14 @@ def test_watermark_dedup_validates_and_runs(spark, tmp_path):
 
     base = spark.createDataFrame(
         [(1, "alpha beta", "en", "s0", 10), (2, "gamma delta", "en", "s0", 11)],
-        sc.DOCS_SCHEMA,
+        schemas.DOCUMENTS,
     )
     redo = spark.createDataFrame(
-        [(3, "Alpha  Beta", "en", "s1", 11)], sc.DOCS_SCHEMA
+        [(3, "Alpha  Beta", "en", "s1", 11)], schemas.DOCUMENTS
     )  # normalizes to doc 1's content
     base.write.parquet(str(tmp_path / "f1.parquet"))
     redo.write.parquet(str(tmp_path / "f2.parquet"))
-    raw = sc.read_documents_stream(spark, str(tmp_path / "f*.parquet"))
+    raw = read_documents_stream(spark, str(tmp_path / "f*.parquet"))
 
     with pytest.raises(ValueError, match="ingested_at"):
         sc.dedup_stream_within_watermark(raw)

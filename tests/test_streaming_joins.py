@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import os
 
-from distributed_mobility_data_pipeline_spark.sources.readers import read_events
+from distributed_mobility_data_pipeline_spark.sources.readers import (
+    read_events,
+    read_events_stream,
+)
 from distributed_mobility_data_pipeline_spark.streaming import events as se
 
 
@@ -19,7 +22,7 @@ def test_stream_static_enrich_equals_batch(spark, sf_dir):
     batch = se.enriched_segment_counts(
         read_events(spark, _events_path(sf_dir)), customers
     )
-    stream_src = se.read_events_stream(spark, _events_path(sf_dir))
+    stream_src = read_events_stream(spark, _events_path(sf_dir))
     assert stream_src.isStreaming
     streamed = se.run_stream_to_memory(
         spark,
@@ -36,7 +39,7 @@ def test_stream_stream_conversions_equals_batch(spark, sf_dir):
     batch = se.view_purchase_conversions(
         read_events(spark, _events_path(sf_dir))
     )
-    stream_src = se.read_events_stream(spark, _events_path(sf_dir))
+    stream_src = read_events_stream(spark, _events_path(sf_dir))
     streamed = se.run_stream_to_memory(
         spark,
         se.view_purchase_conversions(stream_src),

@@ -8,11 +8,12 @@ import os
 
 from pyspark.sql import functions as F
 
+from distributed_mobility_data_pipeline_spark.sources.readers import read_documents_stream
 from distributed_mobility_data_pipeline_spark.streaming import corpus as sc
 
 
 def _run(spark, src, out, idx, ckpt):
-    stream = sc.read_documents_stream(spark, src)
+    stream = read_documents_stream(spark, src)
     q = sc.stream_neardedup_sink(stream, out, idx, ckpt)
     q.processAllAvailable()
     q.stop()

@@ -9,7 +9,10 @@ import os
 import pyspark.sql.functions as F
 
 from distributed_mobility_data_pipeline_spark.operators import dedup
-from distributed_mobility_data_pipeline_spark.sources.readers import read_events
+from distributed_mobility_data_pipeline_spark.sources.readers import (
+    read_events,
+    read_events_stream,
+)
 from distributed_mobility_data_pipeline_spark.streaming import events as se
 from distributed_mobility_data_pipeline_spark.streaming.sinks import stream_merge_upsert
 
@@ -19,7 +22,7 @@ def test_stream_merge_converges_to_batch_keep_latest(spark, sf_dir, tmp_path):
     table = str(tmp_path / "user_latest")
 
     def run(ckpt: str):
-        src = se.read_events_stream(spark, path).select(
+        src = read_events_stream(spark, path).select(
             "user_id", "ts", "event_type", "value"
         )
         q = stream_merge_upsert(
@@ -111,7 +114,7 @@ def test_stream_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_path):
     baseline = batch_events.filter(F.col("value") <= 60.0)
 
     out = str(tmp_path / "psi_feed")
-    src = se.read_events_stream(spark, path).select("value")
+    src = read_events_stream(spark, path).select("value")
     q = stream_drift_monitor(
         src, baseline, "value", edges, out, str(tmp_path / "ckpt")
     )
@@ -180,7 +183,7 @@ def test_stream_histogram_sink_matches_batch_and_replays_idempotently(
 
     # the streaming wrapper end-to-end: fresh table from the real stream
     out2 = str(tmp_path / "hist2")
-    src = se.read_events_stream(spark, path).select("ts", "value")
+    src = read_events_stream(spark, path).select("ts", "value")
     q = sk.stream_histogram_sink(src, out2, str(tmp_path / "ckpt2"))
     q.processAllAvailable()
     q.stop()

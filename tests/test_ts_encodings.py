@@ -14,7 +14,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from distributed_mobility_data_pipeline_spark.sources.readers import read_events
+from distributed_mobility_data_pipeline_spark.sources.readers import (
+    read_events,
+    read_events_stream,
+)
 from distributed_mobility_data_pipeline_spark.streaming import events as se
 
 # fixed µs-precision instants (UTC), two users, with a >30 min session gap
@@ -73,7 +76,7 @@ def test_batch_read_agrees_across_encodings(spark, encoded_paths):
 
 def test_stream_read_agrees_with_batch(spark, encoded_paths):
     for name, path in encoded_paths.items():
-        src = se.read_events_stream(spark, path)
+        src = read_events_stream(spark, path)
         assert dict(src.dtypes)["ts"] == "timestamp", f"{name}: stream ts not normalized"
         out = se.run_stream_to_memory(
             spark, se.tumbling_hourly_counts(src), f"enc_{name}", "complete"

@@ -511,3 +511,43 @@ def test_only_writers_module_writes_dataframes():
     assert not found, (
         f"write tables through sources/writers.py, not directly: {found}"
     )
+
+
+_ENTRY = os.path.join(os.path.dirname(_PKG), "__spark_entry__.py")
+# The one module allowed to read tables.
+_READ_SEAM = os.path.join("sources", "readers.py")
+
+
+def _direct_reads(tree):
+    """(line, attr) of every ``X.read`` or ``X.readStream`` read that is
+    not itself called (both are ``SparkSession`` properties; ``f.read()``
+    is a call)."""
+    called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    return [
+        (n.lineno, n.attr)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and n.attr in ("read", "readStream")
+        and id(n) not in called
+    ]
+
+
+def test_only_readers_module_reads_tables():
+    paths = [_ENTRY] + [
+        os.path.join(root, name)
+        for root, _, files in os.walk(_PKG)
+        for name in files
+        if name.endswith(".py")
+    ]
+    found = {}
+    for path in paths:
+        rel = os.path.relpath(path, _PKG)
+        if rel == _READ_SEAM:
+            continue
+        with open(path, encoding="utf-8") as f:
+            hits = _direct_reads(ast.parse(f.read()))
+        if hits:
+            found[rel] = hits
+    assert not found, (
+        f"read tables through sources/readers.py, not directly: {found}"
+    )
