@@ -7,11 +7,13 @@ appended as JSONL (app.py:219-239). Here:
 
 - a request batch (one row or thousands) becomes a local relation built
   from an Arrow table and is scored as ONE vectorized plan — MLlib
-  ``model.transform`` when a fitted model is supplied, the expression
-  fallback scorers (ml/scoring.py) otherwise, mirroring the reference's
-  local_artifact/fallback split. The optimizer folds the fallback
-  projection into the local relation, so collecting a response runs no
-  Spark job. The Arrow table, not pandas, carries the rows: a pandas
+  ``model.transform`` when a fitted model is supplied, the fallback
+  formula otherwise, mirroring the reference's local_artifact/fallback
+  split. The fallback is one projection over the local relation, the
+  SQL text batch scoring uses (ml/scoring.py ``DEMAND_SQL``/``SURGE_SQL``)
+  rounded to the response's digits; the optimizer folds it into the
+  relation, so collecting a response runs no Spark job. The Arrow
+  table, not pandas, carries the rows: a pandas
   frame only takes the Arrow route when the session enables it, and on
   the other route a null lag arrives as NaN;
 - the prediction-event log is a driver-side JSONL append, one file per
@@ -56,17 +58,21 @@ def surge_requests(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     return _requests(spark, rows, SURGE_REQUEST_SCHEMA)
 
 
-def _serve(requests, model, request_id, scorer, pred_col, out_col, digits) -> DataFrame:
-    if model is not None:
-        scored = model.transform(requests).withColumnRenamed("prediction", pred_col)
-        used = "local_artifact"
-    else:
-        scored, used = scorer(requests), "fallback"
+def _serve(requests, model, request_id, sql, pred_col, out_col, digits) -> DataFrame:
+    if model is None:
+        # one projection: the optimizer folds it into the local relation
+        return requests.select(
+            F.lit(request_id).alias("request_id"),
+            "*",
+            F.expr(f"round({sql}, {digits})").alias(out_col),
+            F.lit("fallback").alias("model_used"),
+        )
+    scored = model.transform(requests).withColumnRenamed("prediction", pred_col)
     return scored.select(
         F.lit(request_id).alias("request_id"),
         "*",
         F.round(F.col(pred_col), digits).alias(out_col),
-        F.lit(used).alias("model_used"),
+        F.lit("local_artifact").alias("model_used"),
     ).drop(pred_col)
 
 
@@ -76,7 +82,7 @@ def serve_demand(
     """Score a demand request batch (app.py:268-345 semantics): model
     artifact if loaded, expression fallback otherwise; predictions
     rounded to 2 decimals like the reference's response."""
-    return _serve(requests, model, request_id, scoring.score_demand_expression,
+    return _serve(requests, model, request_id, scoring.DEMAND_SQL,
                   "predicted_demand", "predicted", 2)
 
 
@@ -84,7 +90,7 @@ def serve_surge(
     requests: DataFrame, model=None, request_id: str = "batch-0"
 ) -> DataFrame:
     """Surge twin (app.py:347-378): clamped multiplier, 3 decimals."""
-    return _serve(requests, model, request_id, scoring.score_surge_expression,
+    return _serve(requests, model, request_id, scoring.SURGE_SQL,
                   "predicted_surge", "predicted_surge_multiplier", 3)
 
 

@@ -4,8 +4,10 @@ The reference infers schema at the CSV boundary (bronze_loader.py:17-19).
 ``sources/readers.read_testdata`` reads every testdata table with its
 schema here instead, so a read plans without an inference job. Each
 schema equals what Spark infers from the files, field by field (checked
-by tests/test_sources.py): the lineitem and orders dates are µs
-timestamps with no UTC adjustment, which Spark reads as timestamp_ntz.
+by tests/test_sources.py). Every field is nullable, since a file read
+makes it so whatever the declaration says. The lineitem and orders
+dates are µs timestamps with no UTC adjustment, which Spark reads as
+timestamp_ntz.
 ``EVENTS`` is what ``read_events`` returns: ``ts`` is a timestamp
 whichever of its three encodings the file holds.
 """
@@ -16,14 +18,14 @@ from pyspark.sql import types as T
 
 REGION = T.StructType(
     [
-        T.StructField("r_regionkey", T.IntegerType(), False),
+        T.StructField("r_regionkey", T.IntegerType(), True),
         T.StructField("r_name", T.StringType(), True),
     ]
 )
 
 NATION = T.StructType(
     [
-        T.StructField("n_nationkey", T.IntegerType(), False),
+        T.StructField("n_nationkey", T.IntegerType(), True),
         T.StructField("n_name", T.StringType(), True),
         T.StructField("n_regionkey", T.IntegerType(), True),
     ]
@@ -31,7 +33,7 @@ NATION = T.StructType(
 
 CUSTOMER = T.StructType(
     [
-        T.StructField("c_custkey", T.LongType(), False),
+        T.StructField("c_custkey", T.LongType(), True),
         T.StructField("c_name", T.StringType(), True),
         T.StructField("c_nationkey", T.IntegerType(), True),
         T.StructField("c_acctbal", T.DoubleType(), True),
@@ -41,7 +43,7 @@ CUSTOMER = T.StructType(
 
 SUPPLIER = T.StructType(
     [
-        T.StructField("s_suppkey", T.LongType(), False),
+        T.StructField("s_suppkey", T.LongType(), True),
         T.StructField("s_name", T.StringType(), True),
         T.StructField("s_nationkey", T.IntegerType(), True),
         T.StructField("s_acctbal", T.DoubleType(), True),
@@ -50,7 +52,7 @@ SUPPLIER = T.StructType(
 
 PART = T.StructType(
     [
-        T.StructField("p_partkey", T.LongType(), False),
+        T.StructField("p_partkey", T.LongType(), True),
         T.StructField("p_name", T.StringType(), True),
         T.StructField("p_brand", T.StringType(), True),
         T.StructField("p_type", T.StringType(), True),
@@ -61,7 +63,7 @@ PART = T.StructType(
 
 EVENTS = T.StructType(
     [
-        T.StructField("event_id", T.LongType(), False),
+        T.StructField("event_id", T.LongType(), True),
         T.StructField("ts", T.TimestampType(), True),
         T.StructField("user_id", T.LongType(), True),
         T.StructField("event_type", T.StringType(), True),
@@ -72,7 +74,7 @@ EVENTS = T.StructType(
 
 LINEITEM = T.StructType(
     [
-        T.StructField("l_orderkey", T.LongType(), False),
+        T.StructField("l_orderkey", T.LongType(), True),
         T.StructField("l_partkey", T.LongType(), True),
         T.StructField("l_suppkey", T.LongType(), True),
         T.StructField("l_linenumber", T.IntegerType(), True),
@@ -88,7 +90,7 @@ LINEITEM = T.StructType(
 
 ORDERS = T.StructType(
     [
-        T.StructField("o_orderkey", T.LongType(), False),
+        T.StructField("o_orderkey", T.LongType(), True),
         T.StructField("o_custkey", T.LongType(), True),
         T.StructField("o_orderstatus", T.StringType(), True),
         T.StructField("o_totalprice", T.DoubleType(), True),
@@ -99,7 +101,7 @@ ORDERS = T.StructType(
 
 DOCUMENTS = T.StructType(
     [
-        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("doc_id", T.LongType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
         T.StructField("source", T.StringType(), True),
@@ -109,7 +111,7 @@ DOCUMENTS = T.StructType(
 
 EMBEDDINGS = T.StructType(
     [
-        T.StructField("vec_id", T.LongType(), False),
+        T.StructField("vec_id", T.LongType(), True),
         T.StructField("embedding", T.ArrayType(T.FloatType()), True),
         T.StructField("label", T.IntegerType(), True),
     ]

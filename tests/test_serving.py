@@ -5,13 +5,17 @@ prediction-event log roundtrip, run store + best-run selection."""
 from __future__ import annotations
 
 import os
+import random
+from decimal import ROUND_HALF_UP, Decimal
 
 import pyspark.sql.functions as F
 import pytest
 from pyspark.ml import Pipeline
 from pyspark.ml.regression import LinearRegression
 
-from distributed_mobility_data_pipeline_spark.ml import monitoring, serving, tracking, training
+from distributed_mobility_data_pipeline_spark.ml import (
+    monitoring, scoring, serving, tracking, training,
+)
 
 
 def test_serve_demand_fallback_batch(spark):
@@ -111,6 +115,85 @@ def test_serve_demand_with_fitted_model(spark):
     assert {r.model_used for r in out} == {"local_artifact"}
     assert {r.hour: r.predicted for r in out} == want
     assert len(out) == 4 and "predicted_demand" not in out[0].asDict()
+
+
+def _spark_round(x: float, digits: int) -> float:
+    """Spark's ``round`` of a double: its shortest decimal string,
+    rounded half up (Python's ``round`` rounds the binary value half to
+    even)."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits), ROUND_HALF_UP))
+
+
+def _demand_oracle(row) -> float:
+    _, _, _, *lags = row
+    raw = sum(
+        w * (0.0 if v is None else v)
+        for w, v in zip(scoring.DEMAND_WEIGHTS.values(), lags)
+    ) + scoring.DEMAND_BIAS
+    return _spark_round(_spark_round(raw, 3), 2)
+
+
+def _surge_oracle(row) -> float:
+    _, is_weekend, n, avg_7r = row
+    ratio = n / avg_7r if avg_7r else 1.0
+    raw = 1.0 + ratio * scoring.SURGE_RATIO_WEIGHT + is_weekend * scoring.SURGE_WEEKEND_BONUS
+    lo, hi = scoring.SURGE_CLAMP
+    return _spark_round(min(max(raw, lo), hi), 3)
+
+
+def test_fallback_scorers_match_independent_oracles(spark):
+    """The SQL-text scorers, batch and served, are bit-equal to the F1
+    pandas_udf and to a Python evaluation that rounds as Spark does (3
+    decimals, then 2 for a demand response). Random rows carry NULL lags
+    and surge baselines of 0 and NULL; rows on a 0.005 grid put many
+    predictions on rounding ties, where rounding once to 2 decimals, or
+    half to even, gives another value. The hour field holds the row
+    index."""
+    rng = random.Random(12)
+
+    def lag():
+        return None if rng.random() < 0.1 else rng.uniform(0, 300)
+
+    def grid():
+        return rng.randrange(20_000) / 200
+
+    demand = [(i, i % 7, i % 2, lag(), lag(), lag()) for i in range(8_000)]
+    demand += [(i, 0, 0, grid(), grid(), grid()) for i in range(8_000, 10_000)]
+    reqs = serving.demand_requests(spark, demand)
+    udf = dict(scoring.score_demand_pandas_udf(reqs).select("hour", "predicted_demand").collect())
+    sql = dict(scoring.score_demand_expression(reqs).select("hour", "predicted_demand").collect())
+    assert sql == udf
+    served = dict(serving.serve_demand(reqs).select("hour", "predicted").collect())
+    assert [i for i, r in enumerate(demand) if served[i] != _demand_oracle(r)] == []
+
+    baselines = [None, 0.0] + [rng.uniform(0.1, 50) for _ in range(18)]
+    surge = [(i, i % 2, rng.randrange(200), rng.choice(baselines)) for i in range(8_000)]
+    surge += [(i, i % 2, rng.randrange(20), rng.randrange(1, 400) / 200) for i in range(8_000, 10_000)]
+    reqs = serving.surge_requests(spark, surge)
+    want = {i: _surge_oracle(r) for i, r in enumerate(surge)}
+    assert dict(scoring.score_surge_expression(reqs).select("hour", "predicted_surge").collect()) == want
+    served = dict(serving.serve_surge(reqs).select("hour", "predicted_surge_multiplier").collect())
+    assert served == want
+
+
+def _shape(plan):
+    kids = plan.children()
+    return plan.nodeName(), [_shape(kids.apply(i)) for i in range(kids.size())]
+
+
+@pytest.mark.parametrize(
+    "make, serve, row",
+    [
+        (serving.demand_requests, serving.serve_demand, (10, 2, 0, 4.0, None, 5.0)),
+        (serving.surge_requests, serving.serve_surge, (8, 0, 100, 1.0)),
+    ],
+)
+def test_fallback_response_is_one_projection(spark, make, serve, row):
+    """A fallback response is one Project over the request's local
+    relation, which the optimizer folds into a new local relation."""
+    qe = serve(make(spark, [row] * 3), request_id="plan")._jdf.queryExecution()
+    assert _shape(qe.analyzed()) == ("Project", [("LocalRelation", [])])
+    assert _shape(qe.optimizedPlan()) == ("LocalRelation", [])
 
 
 def test_health_row(spark):

@@ -106,13 +106,15 @@ def test_register_views_and_sql(spark, sf_dir):
 
 
 def _fields(schema):
-    return [(f.name, f.dataType) for f in schema]
+    return [(f.name, f.dataType, f.nullable) for f in schema]
 
 
 def test_declared_schemas_match_the_files(spark, sf_dir):
     """Each declared testdata schema is what Spark infers from the file,
-    field by field. A read with a wrong declared type fails, but one with
-    a missing or misnamed column reads it as NULL without an error."""
+    field by field: name, type and nullability (a file read makes every
+    field nullable, whatever the declaration says). A read with a wrong
+    declared type fails, but one with a missing or misnamed column reads
+    it as NULL without an error."""
     names = sorted(
         f.removesuffix(".parquet")
         for f in os.listdir(sf_dir)
