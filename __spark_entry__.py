@@ -57,10 +57,7 @@ from distributed_mobility_data_pipeline_spark.sources.readers import (
     read_events_stream,
     read_testdata,
 )
-from distributed_mobility_data_pipeline_spark.sources.writers import (
-    morton_key_2d,
-    morton_key_nd,
-)
+from distributed_mobility_data_pipeline_spark.sources.writers import morton_key_nd
 from distributed_mobility_data_pipeline_spark.streaming import events as stream_ops
 from distributed_mobility_data_pipeline_spark.streaming import stateful as stateful_ops
 from distributed_mobility_data_pipeline_spark.streaming import corpus as stream_corpus
@@ -667,7 +664,6 @@ def queries() -> dict[str, QueryFn]:
         "dedup_corpus_diff": lambda s, d: ddllm_ops.corpus_diff(
             *_corpus_snapshots(s, d)
         ),
-        # the Z-order key optimize_layout(morton=True) clusters by (S11)
         "text_quality_percentile": lambda s, d: text_ops.quality_percentile_filter(
             _t(s, d, "documents"), drop_below=0.1
         ),
@@ -745,10 +741,13 @@ def queries() -> dict[str, QueryFn]:
                 bits_per=21,
             ).alias("zkey"),
         ),
+        # the 2-D Z-order key optimize_layout(morton=True) clusters by
+        # (S11); its oracle is the independent magic-number bit spread
         "scalar_morton_key": lambda s, d: _t(s, d, "orders").select(
             "o_orderkey",
-            morton_key_2d(
-                F.col("o_custkey") % 256, F.col("o_orderkey") % 256
+            morton_key_nd(
+                [F.col("o_custkey") % 256, F.col("o_orderkey") % 256],
+                bits_per=16,
             ).alias("zkey"),
         ),
         "text_token_rarity": lambda s, d: text_ops.token_rarity(

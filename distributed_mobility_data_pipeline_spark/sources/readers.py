@@ -6,6 +6,8 @@ Re-expresses the reference's scan surface:
   schema-inference pass over 100 TB of CSV is a full extra read.
 - S2 table scan (delta_utils.py:21-22) — ``read_parquet``: parquet is the
   package's one table format (sources/writers.py writes it).
+  ``read_batches`` reads the streaming sinks' micro-batch partials
+  (layout in ``writers.write_batch``).
 - S9 JSONL API-log scan (model_monitoring.py:136-152 reads the log in
   plain Python; here it is a schema'd distributed ``spark.read.json``).
 
@@ -47,6 +49,18 @@ def read_csv(
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def read_batches(
+    spark: SparkSession, path: str, before: int | None = None
+) -> DataFrame:
+    """The micro-batch partials ``writers.write_batch`` wrote at ``path``,
+    with their ``batch_id`` column; with ``before``, only the batches
+    whose id is below it (what a replayed batch saw the first time)."""
+    df = read_parquet(spark, path)
+    if before is None:
+        return df
+    return df.filter(F.col("batch_id") < F.lit(before))
 
 
 def read_text_lines(spark: SparkSession, path: str) -> DataFrame:

@@ -6,7 +6,8 @@ Here every table is parquet, with the same write semantics. MERGE (S5) is
 re-expressed as the canonical Spark emulation: target anti-join source on
 the merge keys, union the source, rewrite — idempotent for re-runs with
 the same keys, which is the property batch_scoring.py:161-186 relies on.
-Streaming sinks and the ML run store write through these functions too;
+Streaming sinks write their micro-batch partials with ``write_batch``, and
+the ML run store writes through these functions too;
 ``tests/test_writers.py`` fails when another package module writes a
 DataFrame itself; there are no exceptions (the serving event log is a
 driver-side file append, not a DataFrame write).
@@ -23,7 +24,8 @@ both present (the swap had finished) it deletes ``._bak``; it deletes a
 leftover staging directory. So a mutation leaves the old table or the
 new one. "No table yet" is an existence check after recovery: a table
 that is there but unreadable raises and is never rewritten from one
-batch. One writer per table at a time.
+batch. One writer per table at a time. ``write_append`` and
+``write_batch`` add files in place, outside this protocol.
 """
 
 from __future__ import annotations
@@ -126,23 +128,21 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return _recover(spark, path)
 
 
-def overwrite_partitions(
-    df: DataFrame, path: str, partition_by: list[str]
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present
-    in ``df``, leaving all other partitions of the table untouched —
-    the incremental-reload primitive (a day's re-run replaces that
-    day's folder, never the table).
-
-    Static overwrite mode (the default) would truncate the whole table
-    first; the dynamic session-local option scopes the delete to
-    partitions the write actually produces."""
-    if not partition_by:
-        raise ValueError("overwrite_partitions requires partition columns")
+def write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write one streaming micro-batch's partial: ``df`` plus a
+    ``batch_id`` column, laid out as the ``batch_id=N`` partition of the
+    table at ``path``. The write replaces that one partition and leaves
+    every other batch's untouched (dynamic partition overwrite; static
+    mode would truncate the whole table first). A replayed micro-batch
+    (at-least-once ``foreachBatch`` delivery: a crash between the write
+    and the checkpoint commit) therefore rewrites its own partial instead
+    of appending a duplicate. Readers merge the partials on read through
+    ``readers.read_batches``."""
     (
-        df.write.mode("overwrite")
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
+        .partitionBy("batch_id")
         .parquet(path)
     )
 
@@ -160,10 +160,10 @@ def optimize_layout(
     Range-repartition + in-partition sort so min/max row-group stats
     prune on the locality columns (what Delta's OPTIMIZE ... ZORDER BY
     does), committed like every table mutation. With ``morton=True``
-    and integer columns, the sort key is a true interleaved-bit Z-order key (``morton_key_2d`` for two columns,
-    ``morton_key_nd`` for three or more) — multi-dimensional locality
-    like Delta's ZORDER, not just lexicographic — so predicates on ANY
-    of the columns prune row groups."""
+    and integer columns, the sort key is the interleaved-bit Z-order key
+    ``morton_key_nd`` — multi-dimensional locality like Delta's ZORDER,
+    not just lexicographic — so predicates on ANY of the columns prune
+    row groups."""
     _recover(spark, path)
     df = readers.read_parquet(spark, path)
     # Partition-count heuristic without touching .rdd (which forces an RDD
@@ -190,11 +190,9 @@ def optimize_layout(
                 f"morton=True needs integer columns; got "
                 f"{[(c, dtypes.get(c)) for c in bad]}"
             )
-        if len(zorder_by) == 2:
-            key = morton_key_2d(F.col(zorder_by[0]), F.col(zorder_by[1]))
-        else:
-            key = morton_key_nd([F.col(c) for c in zorder_by])
-        clustered = df.withColumn("_zkey", key)
+        clustered = df.withColumn(
+            "_zkey", morton_key_nd([F.col(c) for c in zorder_by])
+        )
         out = (
             clustered.repartitionByRange(n, "_zkey")
             .sortWithinPartitions("_zkey")
@@ -299,31 +297,6 @@ def apply_cdc_batch(
     _merge(spark, path, latest, upserts, keys, partition_by)
 
 
-def _spread_bits16(x):
-    """Spread the low 16 bits of ``x`` so a zero sits between every bit
-    (the magic-number Morton spread; exact integer ops)."""
-    from pyspark.sql import functions as F
-
-    x = x.bitwiseAND(F.lit(0xFFFF))
-    x = (x.bitwiseOR(F.shiftleft(x, 8))).bitwiseAND(F.lit(0x00FF00FF))
-    x = (x.bitwiseOR(F.shiftleft(x, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = (x.bitwiseOR(F.shiftleft(x, 2))).bitwiseAND(F.lit(0x33333333))
-    x = (x.bitwiseOR(F.shiftleft(x, 1))).bitwiseAND(F.lit(0x55555555))
-    return x
-
-
-def morton_key_2d(a, b):
-    """Interleave the low 16 bits of two integer columns into a 32-bit
-    Z-order (Morton) key: rows close in BOTH dimensions get close keys,
-    so sorting by it clusters 2-D locality into the same row groups —
-    what OPTIMIZE ZORDER does, as a plain deterministic expression."""
-    from pyspark.sql import functions as F
-
-    a64 = a.cast("long")
-    b64 = b.cast("long")
-    return _spread_bits16(a64).bitwiseOR(F.shiftleft(_spread_bits16(b64), 1))
-
-
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -353,11 +326,11 @@ def delete_where(
 
 
 def morton_key_nd(cols, bits_per: int | None = None):
-    """Interleaved-bit Z-order key over ``k`` integer columns
-    (generalizes ``morton_key_2d``): bit ``b`` of column ``j`` lands at
-    position ``b*k + j``, so rows close in ALL dimensions get close
-    keys. ``bits_per`` defaults to 63 // k (each column truncated to
-    its low bits — callers bucket/normalize first, as with any Z-order).
+    """Interleaved-bit Z-order key over ``k`` integer columns: bit ``b``
+    of column ``j`` lands at position ``b*k + j``, so rows close in ALL
+    dimensions get close keys. ``bits_per`` defaults to 63 // k (each
+    column truncated to its low bits — callers bucket/normalize first, as
+    with any Z-order).
 
     Built from plain shift/and/or terms (63 at k=3) — deterministic,
     engine-portable, whole-stage-codegen'd.

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_mobility_data_pipeline_spark.sources import readers, writers
+from distributed_mobility_data_pipeline_spark.streaming.sinks import start_sink
 
 
 def with_fingerprint(docs: DataFrame) -> DataFrame:
@@ -108,10 +109,8 @@ def neardedup_apply_batch(
     try:
         bands = dedup_llm.band_hash_table(batch, n)
         try:
-            idx = (
-                readers.read_parquet(spark, index_path)
-                .filter(F.col("batch_id") < F.lit(batch_id))
-                .select("band", "bhash")
+            idx = readers.read_batches(spark, index_path, before=batch_id).select(
+                "band", "bhash"
             )
             has_index = True
         except AnalysisException:
@@ -136,17 +135,9 @@ def neardedup_apply_batch(
         losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
         survivors = fresh.join(losers, "doc_id", "left_anti").persist()
         if not survivors.isEmpty():
-            writers.overwrite_partitions(
-                survivors.withColumn("batch_id", F.lit(batch_id)),
-                out_path,
-                ["batch_id"],
-            )
-            writers.overwrite_partitions(
-                dedup_llm.band_hash_table(survivors, n).withColumn(
-                    "batch_id", F.lit(batch_id)
-                ),
-                index_path,
-                ["batch_id"],
+            writers.write_batch(survivors, out_path, batch_id)
+            writers.write_batch(
+                dedup_llm.band_hash_table(survivors, n), index_path, batch_id
             )
         survivors.unpersist()
     finally:
@@ -174,14 +165,12 @@ def stream_neardedup_sink(
     ALREADY admitted (arrival order matters across chain-shaped
     clusters, as in any online dedup).
 
-    foreachBatch is at-least-once, so both sinks are made idempotent:
-    corpus and index are PARTITIONED BY batch_id and written with
-    dynamic partition overwrite — a replayed micro-batch overwrites its
-    own partition instead of appending twice. The index read filters to
-    batch_id < current, so a replay sees exactly the state the original
-    attempt saw (the batch's own half-written bands can't flag its docs
-    as dups of themselves) and deterministically rewrites the same
-    partitions.
+    foreachBatch is at-least-once, so corpus and index are replay-safe
+    ``writers.write_batch`` partials. The index read takes only earlier
+    batches (``readers.read_batches(before=batch_id)``), so a replay sees
+    exactly the state the original attempt saw (the batch's own
+    half-written bands can't flag its docs as dups of themselves) and
+    deterministically rewrites the same partials.
 
     Returns the started StreamingQuery.
     """
@@ -189,21 +178,15 @@ def stream_neardedup_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         neardedup_apply_batch(batch_df, batch_id, out_path, index_path, n)
 
-    return (
-        docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
-    )
+    return start_sink(docs, _sink, checkpoint_path)
 
 
 def health_apply_batch(
     batch_df: DataFrame, batch_id: int, out_path: str
 ) -> None:
     """One idempotent micro-batch of streaming corpus-health
-    maintenance: write this batch's per-source partials, partitioned by
-    batch_id with dynamic partition overwrite (replay-safe, same
-    discipline as neardedup_apply_batch).
+    maintenance: write this batch's per-source counts as a replay-safe
+    ``writers.write_batch`` partial.
 
     Every metric is chosen to MERGE: doc/token/keep/language counts are
     sums, and text uniqueness — not mergeable exactly — is carried as a
@@ -232,9 +215,7 @@ def health_apply_batch(
             F.hll_sketch_agg(F.col("_fp"), F.lit(12)).alias("fp_sketch"),
         )
     )
-    writers.overwrite_partitions(
-        partial.withColumn("batch_id", F.lit(batch_id)), out_path, ["batch_id"]
-    )
+    writers.write_batch(partial, out_path, batch_id)
 
 
 def read_corpus_health(spark, path: str) -> DataFrame:
@@ -244,7 +225,7 @@ def read_corpus_health(spark, path: str) -> DataFrame:
     from distributed_mobility_data_pipeline_spark.plans.corpus import health_langs
 
     merged = (
-        readers.read_parquet(spark, path)
+        readers.read_batches(spark, path)
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -8,16 +8,35 @@ emulation of Delta's). Because merge_upsert is idempotent
 on keys, a replayed micro-batch (at-least-once delivery) converges to
 the same table — the end-to-end-exactly-once recipe.
 
-The other sinks write per-batch partials partitioned by batch_id through
-writers.overwrite_partitions, so a replayed micro-batch rewrites its own
-partition.
+The other sinks write per-batch partials through writers.write_batch
+(layout and replay rule there) and read them back merge-on-read through
+readers.read_batches.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 
 from distributed_mobility_data_pipeline_spark.sources import readers, writers
+
+
+def start_sink(
+    stream_df: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    output_mode: str = "append",
+):
+    """Start ``stream_df`` with ``sink(batch_df, batch_id)`` run on every
+    micro-batch, checkpointed at ``checkpoint_dir``; returns the started
+    StreamingQuery (caller awaits/stops)."""
+    return (
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+        .start()
+    )
 
 
 def stream_merge_upsert(
@@ -65,12 +84,7 @@ def stream_merge_upsert(
             batch_df.sparkSession, one, path, keys, partition_by
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return start_sink(stream_df, _sink, checkpoint_dir, "update")
 
 
 def quality_gate_split(
@@ -111,34 +125,20 @@ def stream_quality_gate(
 ):
     """foreachBatch quality gate: per micro-batch, passing rows land in
     the main table and failing rows (with their violation list) in the
-    quarantine path — both partitioned by batch_id with dynamic
-    partition overwrite, so a REPLAYED micro-batch (at-least-once
-    delivery; crash between write and checkpoint commit) rewrites its
-    own partition instead of double-appending (same idempotency
-    discipline as histogram_apply_batch / neardedup_apply_batch).
-    Returns the started StreamingQuery."""
+    quarantine path, both as replay-safe ``writers.write_batch``
+    partials. Returns the started StreamingQuery."""
     from pyspark.sql import functions as F
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         good, bad = quality_gate_split(batch_df, checks)
-        writers.overwrite_partitions(
-            good.withColumn("batch_id", F.lit(batch_id)),
-            good_path,
-            ["batch_id"],
-        )
-        writers.overwrite_partitions(
-            bad.withColumn("violations", F.concat_ws(",", "violations"))
-            .withColumn("batch_id", F.lit(batch_id)),
+        writers.write_batch(good, good_path, batch_id)
+        writers.write_batch(
+            bad.withColumn("violations", F.concat_ws(",", "violations")),
             quarantine_path,
-            ["batch_id"],
+            batch_id,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return start_sink(stream_df, _sink, checkpoint_dir)
 
 
 def stream_drift_monitor(
@@ -150,12 +150,12 @@ def stream_drift_monitor(
     checkpoint_dir: str,
 ):
     """Streaming drift monitor: per micro-batch, compute the fixed-bin
-    PSI of ``col`` against a STATIC baseline distribution and append a
-    one-row (batch_id, psi, n_buckets, n_rows) record to ``out_path`` —
-    the continuously-updated drift dashboard feed (streaming counterpart
-    of the batch PSI at operators/drift.py; reference
-    model_monitoring.py's score-drift check run per arrival instead of
-    per job).
+    PSI of ``col`` against a STATIC baseline distribution and write a
+    one-row (psi, n_buckets, n_rows) ``writers.write_batch`` partial to
+    ``out_path`` — the continuously-updated drift dashboard feed
+    (streaming counterpart of the batch PSI at operators/drift.py;
+    reference model_monitoring.py's score-drift check run per arrival
+    instead of per job).
 
     The baseline's bucket distribution is precomputed ONCE here (it is
     static), so each micro-batch only buckets its own rows: per batch
@@ -170,22 +170,13 @@ def stream_drift_monitor(
         if n == 0:
             return
         psi = drift.psi_fixed_bins(baseline, batch_df, col, edges)
-        # batch_id-partitioned dynamic overwrite: a replayed batch
-        # rewrites its own one-row partition instead of appending a
-        # duplicate (batch_id, psi) record to the dashboard feed
-        writers.overwrite_partitions(
-            psi.select("psi", "n_buckets", F.lit(n).alias("n_rows"))
-            .withColumn("batch_id", F.lit(batch_id)),
+        writers.write_batch(
+            psi.select("psi", "n_buckets", F.lit(n).alias("n_rows")),
             out_path,
-            ["batch_id"],
+            batch_id,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return start_sink(stream_df, _sink, checkpoint_dir)
 
 
 def histogram_apply_batch(
@@ -199,9 +190,8 @@ def histogram_apply_batch(
     ts_col: str = "ts",
 ) -> None:
     """One idempotent micro-batch of incremental histogram maintenance:
-    write THIS batch's daily bin counts as a partial, partitioned by
-    batch_id with dynamic partition overwrite (replays rewrite their
-    own partition — same discipline as corpus.neardedup_apply_batch).
+    write THIS batch's daily bin counts as a replay-safe
+    ``writers.write_batch`` partial.
 
     The summary is mergeable, so partials never need read-modify-write:
     the current histogram is merge-on-read (read_daily_histograms), and
@@ -223,9 +213,7 @@ def histogram_apply_batch(
         hi,
         n_bins,
     )
-    writers.overwrite_partitions(
-        partial.withColumn("batch_id", F.lit(batch_id)), out_path, ["batch_id"]
-    )
+    writers.write_batch(partial, out_path, batch_id)
 
 
 def read_daily_histograms(spark, path: str) -> DataFrame:
@@ -236,7 +224,7 @@ def read_daily_histograms(spark, path: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     return (
-        readers.read_parquet(spark, path)
+        readers.read_batches(spark, path)
         .groupBy("day", "bin")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -264,9 +252,4 @@ def stream_histogram_sink(
             batch_df, batch_id, out_path, lo, hi, n_bins, value_col, ts_col
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return start_sink(stream_df, _sink, checkpoint_dir)

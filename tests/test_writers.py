@@ -122,7 +122,6 @@ def test_optimize_layout_roundtrip(spark, tmp_path):
 
 
 def test_morton_key_matches_reference_interleave(spark):
-    from distributed_mobility_data_pipeline_spark.sources.writers import morton_key_2d
     import pyspark.sql.functions as F
 
     def py_morton(a, b):
@@ -137,7 +136,9 @@ def test_morton_key_matches_reference_interleave(spark):
     got = {
         (r.a, r.b): r.z
         for r in df.select(
-            "a", "b", morton_key_2d(F.col("a"), F.col("b")).alias("z")
+            "a",
+            "b",
+            writers.morton_key_nd([F.col("a"), F.col("b")], bits_per=16).alias("z"),
         ).collect()
     }
     for (a, b), z in got.items():
@@ -236,25 +237,22 @@ def test_delete_where_null_predicate_rows_kept(spark, tmp_path):
     assert {r.k for r in spark.read.parquet(p).collect()} == {2, 3}
 
 
-def test_overwrite_partitions_is_dynamic(spark, tmp_path):
-    p = str(tmp_path / "dyn_part")
-    base = spark.createDataFrame(
-        [(1, "day1"), (2, "day2"), (3, "day3")], "k long, d string"
-    )
-    writers.write_overwrite(base, p, partition_by=["d"])
-    # re-run only day2 with corrected data
-    fixed = spark.createDataFrame([(20, "day2")], "k long, d string")
-    writers.overwrite_partitions(fixed, p, ["d"])
-    got = {(r.k, r.d) for r in spark.read.parquet(p).collect()}
-    assert got == {(1, "day1"), (20, "day2"), (3, "day3")}
+def test_write_batch_replaces_only_its_batch(spark, tmp_path):
+    from distributed_mobility_data_pipeline_spark.sources import readers
 
+    p = str(tmp_path / "partials")
 
-def test_overwrite_partitions_requires_columns(spark, tmp_path):
-    import pytest
+    def rows(*ks):
+        return spark.createDataFrame([(k,) for k in ks], "k long")
 
-    df = spark.createDataFrame([(1, "a")], "k long, d string")
-    with pytest.raises(ValueError):
-        writers.overwrite_partitions(df, str(tmp_path / "x"), [])
+    writers.write_batch(rows(1, 2), p, 0)
+    writers.write_batch(rows(3), p, 1)
+    # a replayed batch 1 (at-least-once delivery) replaces batch 1 only
+    writers.write_batch(rows(30, 31), p, 1)
+    got = {(r.batch_id, r.k) for r in readers.read_batches(spark, p).collect()}
+    assert got == {(0, 1), (0, 2), (1, 30), (1, 31)}
+    before = readers.read_batches(spark, p, before=1).collect()
+    assert {(r.batch_id, r.k) for r in before} == {(0, 1), (0, 2)}
 
 
 def test_partition_pruning_in_plan(spark, tmp_path):
@@ -302,19 +300,6 @@ def test_morton_nd_matches_python_reference(spark):
         return key
 
     assert got == [ref(r) for r in rows]
-
-
-def test_morton_nd_2col_matches_2d(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame([(3, 5), (65535, 1), (0, 0)], ["a", "b"])
-    nd = df.select(
-        writers.morton_key_nd([F.col("a"), F.col("b")], bits_per=16).alias("k")
-    ).collect()
-    d2 = df.select(
-        writers.morton_key_2d(F.col("a"), F.col("b")).alias("k")
-    ).collect()
-    assert [r.k for r in nd] == [r.k for r in d2]
 
 
 def test_morton_nd_validates(spark):
