@@ -7,6 +7,10 @@ shuffle.partitions=200, UTC) but Spark-first:
 - AQE on (runtime coalesce + skew-join) instead of a fixed 200 shuffle
   partitions — strictly better at every scale (SURVEY.md §4).
 - Arrow enabled for the pandas-UDF inference path.
+- IN-lists of more than 10 literals (``isin``; Spark turns them into a
+  set) are compiled against a set reference, not inlined as ``switch``
+  case labels (``inSetSwitchThreshold=0``), so a query re-run with a
+  new list reuses its compiled classes instead of compiling again.
 - UTC session timezone pinned so timestamp semantics match the DuckDB
   oracle and the reference (config.yaml:22).
 - No Delta Lake extensions: parquet is the package's one table format,
@@ -47,6 +51,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.optimizer.inSetSwitchThreshold", "0")
         # split size cap: at 100 TB this bounds per-task input so scan
         # partitions fit executor memory; AQE coalesces the small tail
         .config("spark.sql.files.maxPartitionBytes", "268435456")

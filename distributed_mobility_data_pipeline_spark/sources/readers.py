@@ -14,14 +14,17 @@ Re-expresses the reference's scan surface:
 The driver's testdata tables are read with their ``schemas`` StructType
 (``read_testdata``), so they plan without an inference job; the one
 inference left is ``_events_schema``'s probe of the events file's
-timestamp encoding, shared by the batch and the stream reader. Tables
-the package writes itself are still read by inference (``read_parquet``).
+timestamp encoding, shared by the batch and the stream reader. A table
+the package commits (every ``writers`` mutation) carries its read schema
+in ``SCHEMA_FILE``, so ``read_parquet`` plans it without a job too;
+appended tables, foreign files and ``read_parquet_evolving`` infer.
 ``tests/test_writers.py`` fails when another package module, or
 ``__spark_entry__.py``, reads a table itself.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_mobility_data_pipeline_spark import schemas
+
+# A committed table's read schema (StructType JSON), beside its data
+# files; Spark and pyarrow skip ``_``-prefixed files when they read one.
+SCHEMA_FILE = "_schema.json"
 
 
 def read_csv(
@@ -48,7 +55,28 @@ def read_csv(
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet table scan. A table ``writers`` committed plans from its
+    committed schema, so the read runs no Spark job; any other parquet
+    file or directory is read by inference (one footer-reading job)."""
+    schema = committed_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def committed_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The read schema ``writers`` committed with the table at ``path``
+    (its ``SCHEMA_FILE``), or None when the table has none."""
+    jvm = spark._jvm
+    f = jvm.org.apache.hadoop.fs.Path(path, SCHEMA_FILE)
+    fs = f.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(f):
+        return None
+    stream = fs.open(f)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return T.StructType.fromJson(json.loads(text))
 
 
 def read_batches(

@@ -15,6 +15,9 @@ driver-side file append, not a DataFrame write).
 Commit protocol. Every table mutation (write_overwrite,
 merge_upsert, apply_cdc_batch, delete_where, optimize_layout) ends in
 ``_commit``: it writes the whole new table to ``<path>._tmp_commit``,
+with the table's read schema as ``readers.SCHEMA_FILE`` beside the data
+(so the schema swaps in with the data it describes, and
+``readers.read_parquet`` plans the table without an inference job),
 then ``_atomic_replace`` renames ``<path>`` to ``<path>._bak``, the
 staging directory to ``<path>``, and deletes ``._bak``. A crash between
 the two renames leaves no ``<path>`` and the old table at ``._bak``.
@@ -25,7 +28,9 @@ leftover staging directory. So a mutation leaves the old table or the
 new one. "No table yet" is an existence check after recovery: a table
 that is there but unreadable raises and is never rewritten from one
 batch. One writer per table at a time. ``write_append`` and
-``write_batch`` add files in place, outside this protocol.
+``write_batch`` add files in place, outside this protocol; each first
+deletes the schema file, so a table they grow is read by inference and
+never with a stale schema.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from distributed_mobility_data_pipeline_spark.sources import readers
 
@@ -98,7 +104,50 @@ def _commit(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(staging)
+    _write_schema(spark, df.schema, partition_by or [], staging)
     _atomic_replace(spark, staging, path)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable, as a parquet
+    read returns it."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _write_schema(
+    spark: SparkSession, schema: T.StructType, partition_by: list[str], table: str
+) -> None:
+    """Write the schema a Spark read of ``table`` returns to its
+    ``readers.SCHEMA_FILE``: the data columns first, then the partition
+    columns (whose metadata a read does not keep), all nullable. The
+    partition columns keep their written types, where inference would
+    read a directory value such as ``01`` as an int."""
+    read_schema = T.StructType(
+        [f for f in schema if f.name not in partition_by]
+        + [T.StructField(c, schema[c].dataType) for c in partition_by]
+    )
+    out = _fs(spark, table).create(
+        _hadoop_path(spark, f"{table}/{readers.SCHEMA_FILE}")
+    )
+    try:
+        out.write(_nullable(read_schema).json().encode("utf-8"))
+    finally:
+        out.close()
+
+
+def _drop_schema(spark: SparkSession, path: str) -> None:
+    """Delete the committed schema of the table at ``path`` before files
+    are added to it outside ``_commit``."""
+    schema_file = _hadoop_path(spark, f"{path}/{readers.SCHEMA_FILE}")
+    _fs(spark, path).delete(schema_file, False)
 
 
 def write_overwrite(
@@ -115,6 +164,7 @@ def write_append(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Append sink for metrics/drift/log rows (batch_scoring.py:245)."""
+    _drop_schema(df.sparkSession, path)
     writer = df.write.format("parquet").mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -138,6 +188,7 @@ def write_batch(df: DataFrame, path: str, batch_id: int) -> None:
     and the checkpoint commit) therefore rewrites its own partial instead
     of appending a duplicate. Readers merge the partials on read through
     ``readers.read_batches``."""
+    _drop_schema(df.sparkSession, path)
     (
         df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
@@ -238,11 +289,13 @@ def _merge(
     target row whose key appears in ``key_rows`` (null-safe <=>, matching
     the Delta MERGE condition: NULL-keyed rows replace their NULL-keyed
     match instead of duplicating on every re-run), union ``new_rows`` and
-    commit. With no table yet, ``new_rows`` alone is the table; a table
-    that is there is read once, and a read error propagates."""
+    commit. The left-anti join needs neither distinct nor latest keys,
+    so ``key_rows`` is used as it is. With no table yet, ``new_rows``
+    alone is the table; a table that is there is read once, and a read
+    error propagates."""
     if _recover(spark, path):
         target = readers.read_parquet(spark, path)
-        src_keys = key_rows.select(*keys).dropDuplicates(keys).alias("_mrg_s")
+        src_keys = key_rows.select(*keys).alias("_mrg_s")
         cond = reduce(
             lambda a, b: a & b,
             [
@@ -274,10 +327,10 @@ def apply_cdc_batch(
     updates upsert whole rows. Re-applying the same batch is a no-op
     (idempotent), the property replayed CDC streams rely on.
 
-    Scale: one window over the change batch (keyed shuffle), one
-    anti-join against the target on the key, one rewrite through the
-    shared commit; ``partition_by`` lays the rewritten table out by
-    those columns.
+    Scale: one window over the change batch (keyed shuffle) for the
+    upsert rows, one anti-join of the target against the batch's keys,
+    one rewrite through the shared commit; ``partition_by`` lays the
+    rewritten table out by those columns.
     """
     from pyspark.sql import Window
 
@@ -292,9 +345,10 @@ def apply_cdc_batch(
         .drop("_rn")
     )
     upserts = latest.filter(F.col(op_col) != "D").drop(op_col)
-    # keys come from ALL latest changes (deletes drop the key from the
-    # table); only the upsert rows come back in
-    _merge(spark, path, latest, upserts, keys, partition_by)
+    # every key the batch changes leaves the table (the raw changes have
+    # the same key set as ``latest``, without a second window); only the
+    # upsert rows come back in
+    _merge(spark, path, changes, upserts, keys, partition_by)
 
 
 def delete_where(

@@ -7,13 +7,16 @@ package module writes a DataFrame itself."""
 from __future__ import annotations
 
 import ast
+import datetime
 import os
+import re
 
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import types as T
 
-from distributed_mobility_data_pipeline_spark.sources import writers
+from distributed_mobility_data_pipeline_spark.sources import readers, writers
 
 
 def _df(spark, rows):
@@ -325,9 +328,162 @@ def test_optimize_layout_morton_3col_roundtrip(spark, tmp_path):
     assert {r.k for r in back.collect()} == set(range(500))
 
 
+# --- the committed schema ---------------------------------------------------
+# Every _commit writes the table's read schema beside its data files, so
+# readers.read_parquet plans a committed table without an inference job.
+
+
+def _typed(spark, ks):
+    """A frame with a NOT NULL key, a date, an array and a column with
+    metadata: what a parquet read changes (nullability) or keeps."""
+    df = spark.createDataFrame(
+        [
+            (k, datetime.date(2024, 1, 1 + k % 3), k % 5, float(k), [f"t{k}"])
+            for k in ks
+        ],
+        "k long not null, d date, x int, v double, tags array<string>",
+    )
+    return df.withColumn("v", F.col("v").alias("v", metadata={"unit": "EUR"}))
+
+
+def _fields(schema):
+    return [(f.name, f.dataType, f.nullable, f.metadata) for f in schema]
+
+
+def _jobs(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+_MUTATIONS = {
+    "write_overwrite": lambda s, p: writers.write_overwrite(_typed(s, range(20)), p),
+    "write_overwrite_by_date": lambda s, p: writers.write_overwrite(
+        _typed(s, range(20)), p, ["d"]
+    ),
+    "merge_upsert": lambda s, p: writers.merge_upsert(
+        s, _typed(s, [3, 30]), p, ["k"], ["d"]
+    ),
+    "apply_cdc_batch": lambda s, p: writers.apply_cdc_batch(
+        s,
+        _typed(s, [3, 4, 30]).withColumn("ts", F.lit(1)).withColumn(
+            "op", F.when(F.col("k") == 4, "D").otherwise("U")
+        ),
+        p, ["k"], "ts",
+    ),
+    "delete_where": lambda s, p: writers.delete_where(s, p, F.col("k") < 5),
+    "optimize_layout": lambda s, p: writers.optimize_layout(s, p, ["x"]),
+    "optimize_layout_morton": lambda s, p: writers.optimize_layout(
+        s, p, ["k", "x"], morton=True
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MUTATIONS))
+def test_committed_schema_is_the_inferred_one(spark, tmp_path, name):
+    p = str(tmp_path / "t")
+    _typed(spark, range(20)).write.parquet(p)  # a table with no schema file
+    _MUTATIONS[name](spark, p)
+    got, n_jobs = _jobs(spark, f"plan-{name}", lambda: readers.read_parquet(spark, p))
+    assert n_jobs == 0
+    want = spark.read.parquet(p)
+    assert _fields(readers.committed_schema(spark, p)) == _fields(want.schema)
+    assert _fields(got.schema) == _fields(want.schema)
+    assert want.schema["v"].metadata == {"unit": "EUR"}
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_string_partition_values_read_back_as_written(spark, tmp_path):
+    # inference reads partition directories s=01 and s=10 as ints 1 and
+    # 10; the committed schema keeps the written strings
+    p = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "01"), (2, "10")], "k int, s string")
+    writers.write_overwrite(df, p, ["s"])
+    assert spark.read.parquet(p).schema["s"].dataType == T.IntegerType()
+    back = readers.read_parquet(spark, p)
+    assert back.schema["s"].dataType == T.StringType()
+    assert sorted((r.k, r.s) for r in back.collect()) == [(1, "01"), (2, "10")]
+    assert back.filter(F.col("s") == "01").count() == 1
+
+
+def test_adding_files_drops_the_committed_schema(spark, tmp_path):
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_df(spark, [(1, "a", 1.0)]), p)
+    wider = spark.createDataFrame(
+        [(2, "b", 2.0, "x")], "k int, ds string, v double, extra string"
+    )
+    writers.write_append(wider, p)
+    assert readers.committed_schema(spark, p) is None
+    got, want = readers.read_parquet(spark, p), spark.read.parquet(p)
+    assert _fields(got.schema) == _fields(want.schema)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    # a micro-batch partial written over a committed table drops it too
+    q = str(tmp_path / "partials")
+    writers.write_overwrite(_df(spark, [(1, "a", 1.0)]), q)
+    writers.write_batch(_df(spark, [(2, "b", 2.0)]), q, 0)
+    assert readers.committed_schema(spark, q) is None
+
+
+def test_isin_over_a_new_list_reuses_compiled_code(spark, tmp_path):
+    # Spark turns an isin of more than 10 literals into a set; compiled
+    # against a set reference (not switch case labels), a new list of
+    # days reuses the classes the first list compiled
+    p = str(tmp_path / "days")
+    days = [datetime.date(2024, 1, 1) + datetime.timedelta(d) for d in range(120)]
+    rows = [(days[i % 120], i) for i in range(2400)]
+    writers.write_overwrite(spark.createDataFrame(rows, "day date, cents long"), p)
+    pdf = pd.DataFrame(rows, columns=["day", "cents"])
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def sums(pick):
+        got = (
+            readers.read_parquet(spark, p)
+            .filter(F.col("day").isin(pick))
+            .groupBy("day")
+            .agg(F.sum("cents").alias("s"))
+            .collect()
+        )
+        want = pdf[pdf["day"].isin(pick)].groupby("day")["cents"].sum()
+        assert {r.day: r.s for r in got} == want.to_dict()
+
+    sums(days[:60])
+    before = compiles.getCount()
+    sums(days[60:])
+    assert compiles.getCount() == before
+
+
+def test_apply_cdc_batch_plans_one_window(spark, tmp_path, monkeypatch):
+    # the window picks the latest change per key for the upsert rows; the
+    # anti-join's key side takes the raw changes, with no window of its own
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_df(spark, OLD), p)
+    plans = []
+    commit = writers._commit
+
+    def spy(spark_, df, path, partition_by):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        commit(spark_, df, path, partition_by)
+
+    monkeypatch.setattr(writers, "_commit", spy)
+    changes = spark.createDataFrame(
+        CDC, "k int, ds string, v double, ts long, op string"
+    )
+    writers.apply_cdc_batch(spark, changes, p, ["k"], "ts")
+    assert len(plans) == 1
+    assert len(re.findall(r"\bWindow \[", plans[0])) == 1, plans[0]
+    assert _rows(spark, p) == _replay(CDC)
+
+
 # --- crash consistency of the parquet commit -------------------------------
-# writers._fs is the FileSystem handle behind every rename and delete of the
-# commit; _FailingFs makes its k-th rename or delete raise.
+# writers._fs is the FileSystem handle behind every rename, delete and
+# schema-file create of the commit; _FailingFs makes its k-th such step raise.
 
 OLD = [(k, f"d{k % 2}", float(k)) for k in range(1, 7)]
 MERGE_SRC = [(2, "d0", 20.0), (7, "d1", 7.0)]
@@ -357,6 +513,9 @@ class _FailingFs:
     def delete(self, *args):
         return self._step("delete", *args)
 
+    def create(self, *args):
+        return self._step("create", *args)
+
 
 def _replay(changes):
     """pandas replay of a change batch on OLD: the latest (ts, op) per key
@@ -372,6 +531,12 @@ def _replay(changes):
 def _rows(spark, p):
     rows = spark.read.parquet(p).select("k", "ds", "v").collect()
     return sorted(tuple(r) for r in rows)
+
+
+def _version(spark, p):
+    """The rows and the schema ``readers.read_parquet`` reads at ``p``."""
+    df = readers.read_parquet(spark, p)
+    return sorted(tuple(r) for r in df.select("k", "ds", "v").collect()), df.schema
 
 
 @pytest.mark.parametrize(
@@ -418,13 +583,20 @@ def test_crash_at_every_fs_step_leaves_old_or_new(
         return p, proxy.steps
 
     p, n_steps = run_failing_at(0)
-    assert n_steps >= 3 and _rows(spark, p) == new
+    assert n_steps >= 4 and _rows(spark, p) == new
+    # a reader gets the schema of the version whose rows it reads: the
+    # old table's inferred one or the new table's committed one
+    old_v = (sorted(OLD), _df(spark, OLD).schema)
+    new_v = (new, spark.read.parquet(p).schema)
+    assert readers.committed_schema(spark, p) is not None
+    assert _version(spark, p) == new_v
     for k in range(1, n_steps + 1):
         with pytest.raises(IOError, match="injected"):
             run_failing_at(k)
         p = str(tmp_path / f"t{k}")
         assert writers.table_exists(spark, p), k  # recovers
         assert _rows(spark, p) in (sorted(OLD), new), k
+        assert _version(spark, p) in (old_v, new_v), k
         call(p)
         assert _rows(spark, p) == new, k
         left = sorted(os.listdir(tmp_path))
