@@ -57,34 +57,20 @@ def apply_quality_filters(
     min_quality: float = 0.5,
     max_dup_ngram_ratio: float = 0.3,
     min_tokens: int = 5,
-    dynamic_drop_below: float | None = None,
 ) -> DataFrame:
     """Length + quality + repetition gates, map-only scores joined back
     on doc_id (each score table is narrow; the joins broadcast when the
     corpus side is large and the survivors small — Catalyst/AQE picks).
     The token-length floor exists because blend scores can't catch
-    ultra-short docs: a one-token doc has perfect lexical diversity.
-
-    ``dynamic_drop_below`` switches the quality gate from the fixed
-    ``min_quality`` threshold to the DYNAMIC drop-worst-fraction form.
-    The dynamic path is ``text.quality_histogram_cutoff_filter`` — the
-    fixed-bin histogram cutoff with no global sort — NEVER the exact
-    ``percent_rank`` variant, whose single-partition window does not
-    survive a corpus-scale input (see its docstring)."""
+    ultra-short docs: a one-token doc has perfect lexical diversity."""
     q = text.quality_score(docs).select("doc_id", "quality_score", "n_tokens")
     r = text.repetition_stats(docs, n=2).select("doc_id", "dup_ngram_ratio")
-    joined = docs.join(q, "doc_id").join(r, "doc_id")
-    if dynamic_drop_below is None:
-        quality_gate = F.col("quality_score") >= min_quality
-        joined = joined.filter(quality_gate)
-    else:
-        survivors = text.quality_histogram_cutoff_filter(
-            docs, drop_below=dynamic_drop_below
-        ).select("doc_id")
-        joined = joined.join(survivors, "doc_id", "left_semi")
     return (
-        joined.filter(
-            (F.col("n_tokens") >= min_tokens)
+        docs.join(q, "doc_id")
+        .join(r, "doc_id")
+        .filter(
+            (F.col("quality_score") >= min_quality)
+            & (F.col("n_tokens") >= min_tokens)
             & (F.col("dup_ngram_ratio") <= max_dup_ngram_ratio)
         )
         .drop("quality_score", "dup_ngram_ratio", "n_tokens")

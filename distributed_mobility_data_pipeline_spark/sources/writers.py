@@ -21,7 +21,9 @@ with the table's read schema as ``readers.SCHEMA_FILE`` beside the data
 then ``_atomic_replace`` renames ``<path>`` to ``<path>._bak``, the
 staging directory to ``<path>``, and deletes ``._bak``. A crash between
 the two renames leaves no ``<path>`` and the old table at ``._bak``.
-Recovery (``_recover``) runs before every mutation and inside
+A mutation keeps the table's layout: only ``write_overwrite`` chooses
+partition columns; the others commit with the table's own
+(``_partition_columns``). Recovery (``_recover``) runs before every mutation and inside
 ``table_exists``: with ``<path>`` missing it renames ``._bak`` back; with
 both present (the swap had finished) it deletes ``._bak``; it deletes a
 leftover staging directory. So a mutation leaves the old table or the
@@ -92,20 +94,33 @@ def _atomic_replace(spark: SparkSession, tmp_path: str, path: str) -> None:
 
 
 def _commit(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None,
+    spark: SparkSession, df: DataFrame, path: str, partition_by: list[str]
 ) -> None:
-    """Make ``df`` the whole table at ``path``: write it to the staging
-    directory, then swap it in. The caller has run ``_recover``."""
+    """Make ``df`` the whole table at ``path``, laid out by
+    ``partition_by``: write it to the staging directory, then swap it
+    in. The caller has run ``_recover``."""
     staging = path + _STAGING
-    writer = df.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(staging)
-    _write_schema(spark, df.schema, partition_by or [], staging)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+    _write_schema(spark, df.schema, partition_by, staging)
     _atomic_replace(spark, staging, path)
+
+
+def _partition_columns(spark: SparkSession, path: str) -> list[str]:
+    """The table's partition columns, outermost first: the ``col=value``
+    directory names along its first branch, skipping ``_`` and ``.``
+    names, as Spark's reader finds them. A missing, flat or empty table
+    (an empty write leaves no partition directory) has none."""
+    fs = _fs(spark, path)
+    d = _hadoop_path(spark, path)
+    cols: list[str] = []
+    while fs.exists(d):
+        subs = [st.getPath() for st in fs.listStatus(d) if st.isDirectory()]
+        subs = [p for p in subs if not p.getName().startswith(("_", "."))]
+        if not subs or "=" not in subs[0].getName():
+            break
+        cols.append(subs[0].getName().split("=", 1)[0])
+        d = subs[0]
+    return cols
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -154,21 +169,23 @@ def write_overwrite(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Full-table overwrite, schema evolution allowed
-    (delta_utils.write_delta_overwrite, delta_utils.py:24-33)."""
+    (delta_utils.write_delta_overwrite, delta_utils.py:24-33); the one
+    write that chooses the partition columns (an empty ``df`` has none)."""
     spark = df.sparkSession
     _recover(spark, path)
-    _commit(spark, df, path, partition_by)
+    _commit(spark, df, path, partition_by or [])
 
 
-def write_append(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """Append sink for metrics/drift/log rows (batch_scoring.py:245)."""
-    _drop_schema(df.sparkSession, path)
-    writer = df.write.format("parquet").mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+def write_append(df: DataFrame, path: str) -> None:
+    """Append sink for metrics/drift/log rows (batch_scoring.py:245),
+    into the table's partitions; a ``df`` that lacks a partition column
+    raises, since a file beside them holds rows no read returns."""
+    spark = df.sparkSession
+    parts = _partition_columns(spark, path)
+    if not set(parts) <= set(df.columns):
+        raise ValueError(f"write_append: {path} is partitioned by {parts}")
+    _drop_schema(spark, path)
+    df.write.format("parquet").mode("append").partitionBy(*parts).save(path)
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
@@ -214,8 +231,10 @@ def optimize_layout(
     and integer columns, the sort key is the interleaved-bit Z-order key
     ``morton_key_nd`` — multi-dimensional locality like Delta's ZORDER,
     not just lexicographic — so predicates on ANY of the columns prune
-    row groups."""
+    row groups. A partitioned table keeps its partitions and is clustered
+    within them."""
     _recover(spark, path)
+    parts = _partition_columns(spark, path)
     df = readers.read_parquet(spark, path)
     # Partition-count heuristic without touching .rdd (which forces an RDD
     # materialization of the scan): compaction targets ~4 input splits per
@@ -227,6 +246,7 @@ def optimize_layout(
             len(df.inputFiles()), spark.sparkContext.defaultParallelism
         )
         n = max(in_parts // 4, 1)
+    order = [*parts, *zorder_by]
     if morton:
         if len(zorder_by) < 2:
             raise ValueError("morton=True needs at least two columns")
@@ -241,19 +261,12 @@ def optimize_layout(
                 f"morton=True needs integer columns; got "
                 f"{[(c, dtypes.get(c)) for c in bad]}"
             )
-        clustered = df.withColumn(
+        df = df.withColumn(
             "_zkey", morton_key_nd([F.col(c) for c in zorder_by])
         )
-        out = (
-            clustered.repartitionByRange(n, "_zkey")
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-        )
-    else:
-        out = df.repartitionByRange(n, *zorder_by).sortWithinPartitions(
-            *zorder_by
-        )
-    _commit(spark, out, path, None)
+        order = [*parts, "_zkey"]
+    out = df.repartitionByRange(n, *order).sortWithinPartitions(*order)
+    _commit(spark, out.drop("_zkey"), path, parts)
 
 
 def merge_upsert(
@@ -261,7 +274,6 @@ def merge_upsert(
     source: DataFrame,
     path: str,
     keys: list[str],
-    partition_by: list[str] | None = None,
 ) -> None:
     """Upsert ``source`` into the table at ``path`` on ``keys``.
 
@@ -269,12 +281,12 @@ def merge_upsert(
     (batch_scoring.py:161-186): target ⟕anti source on keys, then union
     source and rewrite — the matched rows are replaced wholesale,
     unmatched inserted, giving the same end state as that MERGE. With no
-    table at ``path`` yet, ``source`` becomes the table.
+    table at ``path`` yet, ``source`` becomes the table (unpartitioned).
 
     The emulation rewrites the whole table through the shared commit, so
     its cost grows with the table, not the batch (ROADMAP open item 5).
     """
-    _merge(spark, path, source, source, keys, partition_by)
+    _merge(spark, path, source, source, keys)
 
 
 def _merge(
@@ -283,7 +295,6 @@ def _merge(
     key_rows: DataFrame,
     new_rows: DataFrame,
     keys: list[str],
-    partition_by: list[str] | None,
 ) -> None:
     """MERGE body of merge_upsert and apply_cdc_batch: drop every
     target row whose key appears in ``key_rows`` (null-safe <=>, matching
@@ -291,8 +302,8 @@ def _merge(
     match instead of duplicating on every re-run), union ``new_rows`` and
     commit. The left-anti join needs neither distinct nor latest keys,
     so ``key_rows`` is used as it is. With no table yet, ``new_rows``
-    alone is the table; a table that is there is read once, and a read
-    error propagates."""
+    alone is the table, unpartitioned; a table that is there is read
+    once (a read error propagates) and keeps its partition columns."""
     if _recover(spark, path):
         target = readers.read_parquet(spark, path)
         src_keys = key_rows.select(*keys).alias("_mrg_s")
@@ -305,7 +316,7 @@ def _merge(
         )
         kept = target.alias("_mrg_t").join(src_keys, on=cond, how="left_anti")
         new_rows = kept.unionByName(new_rows, allowMissingColumns=True)
-    _commit(spark, new_rows, path, partition_by)
+    _commit(spark, new_rows, path, _partition_columns(spark, path))
 
 
 def apply_cdc_batch(
@@ -315,7 +326,6 @@ def apply_cdc_batch(
     keys: list[str],
     ts_col: str,
     op_col: str = "op",
-    partition_by: list[str] | None = None,
 ) -> None:
     """Apply a CDC change batch (op ∈ {I, U, D} + change timestamp) to
     the table at ``path`` — the change-data-feed consumer the Delta/
@@ -329,8 +339,7 @@ def apply_cdc_batch(
 
     Scale: one window over the change batch (keyed shuffle) for the
     upsert rows, one anti-join of the target against the batch's keys,
-    one rewrite through the shared commit; ``partition_by`` lays the
-    rewritten table out by those columns.
+    one rewrite through the shared commit, which keeps the layout.
     """
     from pyspark.sql import Window
 
@@ -348,22 +357,21 @@ def apply_cdc_batch(
     # every key the batch changes leaves the table (the raw changes have
     # the same key set as ``latest``, without a second window); only the
     # upsert rows come back in
-    _merge(spark, path, changes, upserts, keys, partition_by)
+    _merge(spark, path, changes, upserts, keys)
 
 
 def delete_where(
     spark: SparkSession,
     path: str,
     predicate: "F.Column",
-    partition_by: list[str] | None = None,
 ) -> int:
     """Compliance-style delete: rewrite the table at ``path`` without
     rows matching ``predicate`` (the parquet stand-in for Delta's
     DELETE WHERE — right-to-erasure and retention-window enforcement).
 
     Returns the number of rows deleted. Commits like every table
-    mutation, so a crash mid-rewrite keeps the old table; ``partition_by``
-    lays the rewritten table out by those columns.
+    mutation: a crash mid-rewrite keeps the old table, and the layout
+    stays.
     """
     _recover(spark, path)
     df = readers.read_parquet(spark, path)
@@ -375,7 +383,7 @@ def delete_where(
     ).collect()[0][0] or 0
     if n_deleted == 0:
         return 0
-    _commit(spark, kept, path, partition_by)
+    _commit(spark, kept, path, _partition_columns(spark, path))
     return n_deleted
 
 

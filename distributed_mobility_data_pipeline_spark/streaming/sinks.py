@@ -44,10 +44,11 @@ def stream_merge_upsert(
     path: str,
     keys: list[str],
     checkpoint_dir: str,
-    partition_by: list[str] | None = None,
     dedup_order_col: str | None = None,
 ):
-    """writeStream.foreachBatch → merge_upsert per micro-batch.
+    """writeStream.foreachBatch → merge_upsert per micro-batch; the
+    table keeps the layout it has (a missing one is created
+    unpartitioned).
 
     ``dedup_order_col``: within one micro-batch the same key can appear
     many times; keep the row with the max of this column (e.g. event
@@ -80,9 +81,7 @@ def stream_merge_upsert(
             one = dedup.keep_latest(
                 batch_df, keys, dedup_order_col, tiebreak
             )
-        writers.merge_upsert(
-            batch_df.sparkSession, one, path, keys, partition_by
-        )
+        writers.merge_upsert(batch_df.sparkSession, one, path, keys)
 
     return start_sink(stream_df, _sink, checkpoint_dir, "update")
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ast
 import datetime
+import inspect
 import os
 import re
 
@@ -17,6 +18,7 @@ import pytest
 from pyspark.sql import types as T
 
 from distributed_mobility_data_pipeline_spark.sources import readers, writers
+from distributed_mobility_data_pipeline_spark.streaming import sinks
 
 
 def _df(spark, rows):
@@ -99,16 +101,17 @@ def test_optimize_layout_crash_safe(spark, tmp_path, monkeypatch):
 
 
 def test_merge_upsert_partitioned(spark, tmp_path):
-    # partition_by flows through the temp-dir write + atomic swap
+    # the merge reads the layout from the table and keeps it through the
+    # temp-dir write + atomic swap
     p = str(tmp_path / "t8")
-    writers.merge_upsert(
-        spark, _df(spark, [(1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)]),
-        p, keys=["k"], partition_by=["ds"],
+    writers.write_overwrite(
+        _df(spark, [(1, "2024-01-01", 1.0), (2, "2024-01-02", 2.0)]),
+        p, partition_by=["ds"],
     )
-    writers.merge_upsert(
-        spark, _df(spark, [(2, "2024-01-02", 20.0), (3, "2024-01-03", 3.0)]),
-        p, keys=["k"], partition_by=["ds"],
-    )
+    src = _df(spark, [(2, "2024-01-02", 20.0), (3, "2024-01-03", 3.0)])
+    writers.merge_upsert(spark, src, p, keys=["k"])
+    writers.merge_upsert(spark, src, p, keys=["k"])
+    assert _layout(p) == ["ds"]
     df = spark.read.parquet(p)
     assert {(r.k, r.v) for r in df.collect()} == {(1, 1.0), (2, 20.0), (3, 3.0)}
     assert df.filter(F.col("ds") == "2024-01-02").count() == 1
@@ -346,6 +349,14 @@ def _typed(spark, ks):
     return df.withColumn("v", F.col("v").alias("v", metadata={"unit": "EUR"}))
 
 
+def _flat_and_partitioned(names, col):
+    """(name, layout) cases: each name on a flat table (id ``name``) and
+    on a table partitioned by ``col`` (id ``name-by_col``)."""
+    return [pytest.param(n, [], id=n) for n in names] + [
+        pytest.param(n, [col], id=f"{n}-by_{col}") for n in names
+    ]
+
+
 def _fields(schema):
     return [(f.name, f.dataType, f.nullable, f.metadata) for f in schema]
 
@@ -368,7 +379,7 @@ _MUTATIONS = {
         _typed(s, range(20)), p, ["d"]
     ),
     "merge_upsert": lambda s, p: writers.merge_upsert(
-        s, _typed(s, [3, 30]), p, ["k"], ["d"]
+        s, _typed(s, [3, 30]), p, ["k"]
     ),
     "apply_cdc_batch": lambda s, p: writers.apply_cdc_batch(
         s,
@@ -385,10 +396,13 @@ _MUTATIONS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_MUTATIONS))
-def test_committed_schema_is_the_inferred_one(spark, tmp_path, name):
+@pytest.mark.parametrize(
+    "name, layout", _flat_and_partitioned(sorted(_MUTATIONS), "d")
+)
+def test_committed_schema_is_the_inferred_one(spark, tmp_path, name, layout):
     p = str(tmp_path / "t")
-    _typed(spark, range(20)).write.parquet(p)  # a table with no schema file
+    # a table with no schema file, flat or partitioned by the date
+    _typed(spark, range(20)).write.partitionBy(*layout).parquet(p)
     _MUTATIONS[name](spark, p)
     got, n_jobs = _jobs(spark, f"plan-{name}", lambda: readers.read_parquet(spark, p))
     assert n_jobs == 0
@@ -481,6 +495,96 @@ def test_apply_cdc_batch_plans_one_window(spark, tmp_path, monkeypatch):
     assert _rows(spark, p) == _replay(CDC)
 
 
+# --- a mutation keeps the table's layout ------------------------------------
+# Only write_overwrite chooses partition columns; every other mutation
+# reads them from the table's directories and commits with the same ones.
+
+
+def _layout(p):
+    """The partition columns of the table at ``p``, read off its
+    directories; fails unless each level holds only data files or only
+    ``col=value`` directories of one column, with the same layout below."""
+    names = [n for n in os.listdir(p) if not n.startswith(("_", "."))]
+    subs = [n for n in names if os.path.isdir(os.path.join(p, n))]
+    if not subs:
+        return []
+    cols = {n.split("=", 1)[0] for n in subs}
+    assert subs == names and all("=" in n for n in subs) and len(cols) == 1, names
+    inner = {tuple(_layout(os.path.join(p, n))) for n in subs}
+    assert len(inner) == 1, inner
+    return [cols.pop(), *inner.pop()]
+
+
+def _kdhx(spark, rows):
+    return spark.createDataFrame(rows, "k int, ds string, h int, x int")
+
+
+KDHX = [(k, f"d{k % 2}", k % 3, k * 7 % 5) for k in range(1, 9)]
+UPSERTS = [(2, "d0", 0, 9), (20, "d1", 2, 3)]
+
+
+def _without(*ks):
+    return [r for r in KDHX if r[0] not in ks]
+
+
+_KEEPING = {
+    "merge_upsert": (
+        lambda s, p: writers.merge_upsert(s, _kdhx(s, UPSERTS), p, ["k"]),
+        _without(2) + UPSERTS,
+    ),
+    "apply_cdc_batch": (
+        lambda s, p: writers.apply_cdc_batch(
+            s,
+            s.createDataFrame(
+                [(*r, 1, "U") for r in UPSERTS] + [(3, None, None, None, 1, "D")],
+                "k int, ds string, h int, x int, ts long, op string",
+            ),
+            p, ["k"], "ts",
+        ),
+        _without(2, 3) + UPSERTS,
+    ),
+    "delete_where": (
+        lambda s, p: writers.delete_where(s, p, F.col("x") > 2),
+        [r for r in KDHX if r[3] <= 2],
+    ),
+    "optimize_layout": (
+        lambda s, p: writers.optimize_layout(s, p, ["x"], target_partitions=3),
+        KDHX,
+    ),
+    "optimize_layout_morton": (
+        lambda s, p: writers.optimize_layout(s, p, ["k", "x"], morton=True),
+        KDHX,
+    ),
+    "write_append": (
+        lambda s, p: writers.write_append(_kdhx(s, UPSERTS[1:]), p),
+        KDHX + UPSERTS[1:],
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", [["ds"], ["ds", "h"]], ids=["by_ds", "by_ds_h"])
+@pytest.mark.parametrize("name", sorted(_KEEPING))
+def test_a_mutation_keeps_the_partition_columns(spark, tmp_path, name, layout):
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_kdhx(spark, KDHX), p, layout)
+    call, want = _KEEPING[name]
+    call(spark, p)
+    assert _layout(p) == layout
+    # every row is readable: an append's files beside the partition
+    # directories would hold rows no read returns
+    got = spark.read.parquet(p).select("k", "ds", "h", "x").collect()
+    assert sorted(map(tuple, got)) == sorted(want)
+
+
+def test_write_append_without_a_partition_column_raises(spark, tmp_path):
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_kdhx(spark, KDHX), p, ["ds"])
+    with pytest.raises(ValueError, match="partitioned by"):
+        writers.write_append(_kdhx(spark, UPSERTS).drop("ds"), p)
+    got = spark.read.parquet(p).select("k", "ds", "h", "x").collect()
+    assert sorted(map(tuple, got)) == sorted(KDHX) and _layout(p) == ["ds"]
+
+
 # --- crash consistency of the parquet commit -------------------------------
 # writers._fs is the FileSystem handle behind every rename, delete and
 # schema-file create of the commit; _FailingFs makes its k-th such step raise.
@@ -540,10 +644,13 @@ def _version(spark, p):
 
 
 @pytest.mark.parametrize(
-    "name", ["merge_upsert", "apply_cdc_batch", "delete_where", "write_overwrite"]
+    "name, layout",
+    _flat_and_partitioned(
+        ["merge_upsert", "apply_cdc_batch", "delete_where", "write_overwrite"], "ds"
+    ),
 )
 def test_crash_at_every_fs_step_leaves_old_or_new(
-    spark, tmp_path, monkeypatch, name
+    spark, tmp_path, monkeypatch, name, layout
 ):
     call, new = {
         "merge_upsert": (
@@ -573,7 +680,7 @@ def test_crash_at_every_fs_step_leaves_old_or_new(
 
     def run_failing_at(k):
         p = str(tmp_path / f"t{k}")
-        _df(spark, OLD).coalesce(2).write.parquet(p)
+        _df(spark, OLD).coalesce(2).write.partitionBy(*layout).parquet(p)
         proxy = _FailingFs(real_fs(spark, p), k)
         monkeypatch.setattr(writers, "_fs", lambda s, path: proxy)
         try:
@@ -582,11 +689,21 @@ def test_crash_at_every_fs_step_leaves_old_or_new(
             monkeypatch.setattr(writers, "_fs", real_fs)
         return p, proxy.steps
 
+    # only write_overwrite chooses a layout; the others keep the old one
+    new_layout = ["ds"] if name == "write_overwrite" else layout
     p, n_steps = run_failing_at(0)
     assert n_steps >= 4 and _rows(spark, p) == new
-    # a reader gets the schema of the version whose rows it reads: the
-    # old table's inferred one or the new table's committed one
-    old_v = (sorted(OLD), _df(spark, OLD).schema)
+    assert _layout(p) == new_layout
+    # a reader gets the schema and layout of the version whose rows it
+    # reads: the old table's inferred schema or the new table's committed one
+    old_schema = _df(spark, OLD).schema
+    old_v = (
+        sorted(OLD),
+        T.StructType(
+            [f for f in old_schema if f.name not in layout]
+            + [old_schema[c] for c in layout]
+        ),
+    )
     new_v = (new, spark.read.parquet(p).schema)
     assert readers.committed_schema(spark, p) is not None
     assert _version(spark, p) == new_v
@@ -595,10 +712,12 @@ def test_crash_at_every_fs_step_leaves_old_or_new(
             run_failing_at(k)
         p = str(tmp_path / f"t{k}")
         assert writers.table_exists(spark, p), k  # recovers
-        assert _rows(spark, p) in (sorted(OLD), new), k
+        assert (_rows(spark, p), _layout(p)) in (
+            (sorted(OLD), layout), (new, new_layout)
+        ), k
         assert _version(spark, p) in (old_v, new_v), k
         call(p)
-        assert _rows(spark, p) == new, k
+        assert _rows(spark, p) == new and _layout(p) == new_layout, k
         left = sorted(os.listdir(tmp_path))
         assert left == sorted(f"t{j}" for j in range(k + 1)), k  # no leftovers
 
@@ -668,6 +787,19 @@ def test_only_writers_module_writes_dataframes():
     assert not found, (
         f"write tables through sources/writers.py, not directly: {found}"
     )
+
+
+def test_only_write_overwrite_chooses_a_layout():
+    # every other mutation reads the partition columns from the table
+    takes = [
+        f"{m.__name__.rsplit('.', 1)[1]}.{name}"
+        for m in (writers, sinks)
+        for name, fn in inspect.getmembers(m, inspect.isfunction)
+        if not name.startswith("_")
+        and fn.__module__ == m.__name__
+        and "partition_by" in inspect.signature(fn).parameters
+    ]
+    assert takes == ["writers.write_overwrite"]
 
 
 _ENTRY = os.path.join(os.path.dirname(_PKG), "__spark_entry__.py")
