@@ -19,8 +19,12 @@ appended as JSONL (app.py:219-239). Here:
 - the prediction-event log is a driver-side JSONL append, one file per
   process, in the shape ml/monitoring.latency_stats reads back (the
   reference's request_id, task, model_used, latency_ms, plus endpoint
-  and status);
-- /health is a one-row DataFrame.
+  and status). It re-collects the response DataFrame itself, so it
+  reuses the plan the caller's collect built: only execution runs again
+  (for a fallback response, a read of the local relation), where a new
+  select would analyse, optimise and plan a second Dataset;
+- /health is a one-row local relation built from an Arrow table, so
+  collecting it runs no Spark job either.
 """
 
 from __future__ import annotations
@@ -64,8 +68,8 @@ def _serve(requests, model, request_id, sql, pred_col, out_col, digits) -> DataF
         return requests.select(
             F.lit(request_id).alias("request_id"),
             "*",
-            F.expr(f"round({sql}, {digits})").alias(out_col),
-            F.lit("fallback").alias("model_used"),
+            F.expr(f"round({sql}, {digits}) AS {out_col}"),
+            F.expr("'fallback' AS model_used"),
         )
     scored = model.transform(requests).withColumnRenamed("prediction", pred_col)
     return scored.select(
@@ -102,13 +106,17 @@ def log_prediction_events(
     (app.py:219-239's log shape, extended with the endpoint/status fields
     ml/monitoring.latency_stats groups and error-counts on). One write
     per call; a line torn by a crash is dropped on read by
-    sources.readers.read_json_log."""
+    sources.readers.read_json_log.
+
+    The rows come from ``responses.collect()``: the caller's collect has
+    already planned that DataFrame, so this re-collect runs execution
+    only and builds no second Dataset."""
     lines = "".join(
         json.dumps({"request_id": r.request_id, "task": task, "endpoint": f"/predict/{task}",
                     "model_used": r.model_used, "latency_ms": latency_ms, "status": status},
                    separators=(",", ":"))
         + "\n"
-        for r in responses.select("request_id", "model_used").collect()
+        for r in responses.collect()
     )
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, f"part-{os.getpid()}.jsonl"), "a", encoding="utf-8") as f:
@@ -116,9 +124,11 @@ def log_prediction_events(
 
 
 def health(spark: SparkSession, models: dict | None = None) -> DataFrame:
-    """One-row health record (app.py:247-253)."""
+    """One-row health record (app.py:247-253), a local relation like a
+    request frame."""
     models = models or {}
-    return spark.createDataFrame(
-        [("ok", models.get("demand") is not None, models.get("surge") is not None)],
-        "status string, demand_model_loaded boolean, surge_model_loaded boolean",
-    )
+    return spark.createDataFrame(pa.table({
+        "status": ["ok"],
+        "demand_model_loaded": [models.get("demand") is not None],
+        "surge_model_loaded": [models.get("surge") is not None],
+    }))

@@ -30,9 +30,10 @@ leftover staging directory. So a mutation leaves the old table or the
 new one. "No table yet" is an existence check after recovery: a table
 that is there but unreadable raises and is never rewritten from one
 batch. One writer per table at a time. ``write_append`` and
-``write_batch`` add files in place, outside this protocol; each first
-deletes the schema file, so a table they grow is read by inference and
-never with a stale schema.
+``write_batch`` add files in place, outside this protocol.
+``write_append`` keeps the committed schema, widening it first when
+the rows add columns; ``write_batch`` deletes it, so a table of
+partials is read by inference and never with a stale schema.
 """
 
 from __future__ import annotations
@@ -179,12 +180,31 @@ def write_overwrite(
 def write_append(df: DataFrame, path: str) -> None:
     """Append sink for metrics/drift/log rows (batch_scoring.py:245),
     into the table's partitions; a ``df`` that lacks a partition column
-    raises, since a file beside them holds rows no read returns."""
+    raises, since a file beside them holds rows no read returns.
+
+    A committed schema stays: the read keeps the written types, where
+    inference would read a partition value such as ``01`` as an int. A
+    ``df`` with new columns widens it (nullable, before the partition
+    columns) before any file is added, so a crash in between leaves
+    only null columns; a column whose type differs from the committed
+    one raises."""
     spark = df.sparkSession
     parts = _partition_columns(spark, path)
     if not set(parts) <= set(df.columns):
         raise ValueError(f"write_append: {path} is partitioned by {parts}")
-    _drop_schema(spark, path)
+    committed = readers.committed_schema(spark, path)
+    if committed is not None:
+        have = {f.name: f.dataType for f in committed}
+        retyped = [
+            f"{f.name}: {have[f.name].simpleString()} -> {f.dataType.simpleString()}"
+            for f in df.schema
+            if f.name in have and _nullable(f.dataType) != have[f.name]
+        ]
+        if retyped:
+            raise ValueError(f"write_append: {path} retypes {retyped}")
+        added = [f for f in df.schema if f.name not in have]
+        if added:
+            _write_schema(spark, T.StructType(list(committed) + added), parts, path)
     df.write.format("parquet").mode("append").partitionBy(*parts).save(path)
 
 

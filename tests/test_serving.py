@@ -4,6 +4,7 @@ prediction-event log roundtrip, run store + best-run selection."""
 
 from __future__ import annotations
 
+import json
 import os
 import random
 from decimal import ROUND_HALF_UP, Decimal
@@ -99,9 +100,10 @@ def test_fallback_request_runs_no_spark_job(spark, tmp_path, task, make, serve, 
     assert stats.endpoint == f"/predict/{task}" and stats.n_requests == 1_001
 
 
-def test_serve_demand_with_fitted_model(spark):
+def test_serve_demand_with_fitted_model(spark, tmp_path):
     """The MLlib-model branch: a fitted pipeline scores the request and
-    its prediction, rounded to 2 decimals, is the response."""
+    its prediction, rounded to 2 decimals, is the response; its event
+    log has one line per response row."""
     numeric = ["n_lag_1", "n_lag_7", "avg_7r"]
     rows = [(h, 1, 0, 1.0 * h, 2.0 * h, 0.5 * h + 1) for h in range(1, 9)]
     train = serving.demand_requests(spark, rows).withColumn(
@@ -115,6 +117,35 @@ def test_serve_demand_with_fitted_model(spark):
     assert {r.model_used for r in out} == {"local_artifact"}
     assert {r.hour: r.predicted for r in out} == want
     assert len(out) == 4 and "predicted_demand" not in out[0].asDict()
+    log = str(tmp_path / "log")
+    serving.log_prediction_events(
+        serving.serve_demand(req, model=fitted, request_id="m-1"), log, "demand", 7
+    )
+    (part,) = os.listdir(log)
+    with open(os.path.join(log, part), encoding="utf-8") as f:
+        lines = [json.loads(line) for line in f]
+    assert [(e["request_id"], e["model_used"], e["latency_ms"]) for e in lines] == [
+        ("m-1", "local_artifact", 7)
+    ] * 4
+
+
+def test_log_reuses_the_response_plan(spark, tmp_path, monkeypatch):
+    """The event log re-collects the response the caller collected, so
+    it reuses that plan; it builds no Dataset of its own."""
+    resp = serving.serve_surge(
+        serving.surge_requests(spark, [(8, 0, 100, 1.0)] * 3), request_id="plan-1"
+    )
+    resp.collect()
+
+    def new_dataset(*args, **kwargs):
+        raise AssertionError("log_prediction_events built a new Dataset")
+
+    with monkeypatch.context() as m:
+        for name in ("select", "selectExpr", "withColumn", "drop", "toDF"):
+            m.setattr(type(resp), name, new_dataset)
+        serving.log_prediction_events(resp, str(tmp_path), "surge", 3)
+    (stats,) = monitoring.latency_stats(spark.read.json(str(tmp_path))).collect()
+    assert stats.endpoint == "/predict/surge" and stats.n_requests == 3
 
 
 def _spark_round(x: float, digits: int) -> float:
@@ -197,7 +228,16 @@ def test_fallback_response_is_one_projection(spark, make, serve, row):
 
 
 def test_health_row(spark):
-    h = serving.health(spark, {"demand": object()}).collect()[0]
+    """/health, like a fallback request, is a local relation read on the
+    driver: no Spark job."""
+    sc, group = spark.sparkContext, "no-job-health"
+    sc.setJobGroup(group, "health")
+    try:
+        (h,) = serving.health(spark, {"demand": object()}).collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert h.status == "ok" and h.demand_model_loaded and not h.surge_model_loaded
 
 

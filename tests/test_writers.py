@@ -433,15 +433,54 @@ def test_adding_files_drops_the_committed_schema(spark, tmp_path):
         [(2, "b", 2.0, "x")], "k int, ds string, v double, extra string"
     )
     writers.write_append(wider, p)
-    assert readers.committed_schema(spark, p) is None
-    got, want = readers.read_parquet(spark, p), spark.read.parquet(p)
-    assert _fields(got.schema) == _fields(want.schema)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    # an append that adds a column widens the committed schema instead
+    widened = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in wider.schema]
+    )
+    assert _fields(readers.committed_schema(spark, p)) == _fields(widened)
+    got = readers.read_parquet(spark, p)
+    assert _fields(got.schema) == _fields(widened)
+    assert sorted(map(tuple, got.collect())) == [(1, "a", 1.0, None), (2, "b", 2.0, "x")]
     # a micro-batch partial written over a committed table drops it too
     q = str(tmp_path / "partials")
     writers.write_overwrite(_df(spark, [(1, "a", 1.0)]), q)
     writers.write_batch(_df(spark, [(2, "b", 2.0)]), q, 0)
     assert readers.committed_schema(spark, q) is None
+
+
+def test_append_then_merge_keeps_a_string_partition_column(spark, tmp_path):
+    # inference would read the appended table's ds=01, ds=02 as ints, and
+    # the next commit would write that as bigint directories ds=1, ds=2
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_df(spark, [(1, "01", 1.0)]), p, partition_by=["ds"])
+    writers.write_append(_df(spark, [(2, "02", 2.0)]), p)
+    back = readers.read_parquet(spark, p)
+    assert back.schema["ds"].dataType == T.StringType()
+    assert sorted((r.k, r.ds) for r in back.collect()) == [(1, "01"), (2, "02")]
+    writers.merge_upsert(spark, _df(spark, [(3, "03", 3.0)]), p, ["k"])
+    assert sorted(n for n in os.listdir(p) if n.startswith("ds=")) == [
+        "ds=01", "ds=02", "ds=03"
+    ]
+    assert readers.committed_schema(spark, p)["ds"].dataType == T.StringType()
+    got = readers.read_parquet(spark, p).collect()
+    assert sorted((r.k, r.ds, r.v) for r in got) == [
+        (1, "01", 1.0), (2, "02", 2.0), (3, "03", 3.0)
+    ]
+
+
+@pytest.mark.parametrize(
+    "ddl, row",
+    [("k int, ds string, v string", (2, "02", "x")), ("k int, ds int, v double", (2, 2, 2.0))],
+    ids=["data_column", "partition_column"],
+)
+def test_append_that_retypes_a_column_raises(spark, tmp_path, ddl, row):
+    p = str(tmp_path / "t")
+    writers.write_overwrite(_df(spark, [(1, "01", 1.0)]), p, partition_by=["ds"])
+    schema = readers.committed_schema(spark, p)
+    with pytest.raises(ValueError, match="retypes"):
+        writers.write_append(spark.createDataFrame([row], ddl), p)
+    assert readers.committed_schema(spark, p) == schema
+    assert [tuple(r) for r in readers.read_parquet(spark, p).collect()] == [(1, 1.0, "01")]
 
 
 def test_isin_over_a_new_list_reuses_compiled_code(spark, tmp_path):
