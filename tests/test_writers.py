@@ -1,8 +1,10 @@
 """Write-path semantics (SURVEY.md §2.1 S3-S5): overwrite, append,
 MERGE idempotency — re-running the same upsert must not duplicate rows
 (the property batch_scoring.py:151-186 relies on) — and a parquet commit
-that leaves the old or the new table whichever step fails. No other
-package module writes a DataFrame itself."""
+that leaves the old or the new table whichever step fails. Every write
+is zstd parquet with v2 data pages, and tables of older files read the
+same through Spark, pyarrow and DuckDB. No other package module writes
+a DataFrame itself."""
 
 from __future__ import annotations
 
@@ -12,7 +14,10 @@ import inspect
 import os
 import re
 
+import duckdb
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
@@ -411,6 +416,192 @@ def test_committed_schema_is_the_inferred_one(spark, tmp_path, name, layout):
     assert _fields(got.schema) == _fields(want.schema)
     assert want.schema["v"].metadata == {"unit": "EUR"}
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+# --- the table file format --------------------------------------------------
+# Every write is writers.TABLE_FORMAT: zstd column chunks and v2 data pages,
+# under which a distinct-valued bigint overflows its dictionary into
+# DELTA_BINARY_PACKED (v1 pages fall back to PLAIN).
+
+# Spark's default file format
+_SPARK_DEFAULT = {"compression": "snappy", "parquet.writer.version": "v1"}
+
+_PUBLISHING = {
+    **_MUTATIONS,
+    "write_append": lambda s, p: writers.write_append(_typed(s, range(20, 30)), p),
+    "write_batch": lambda s, p: writers.write_batch(_typed(s, range(20, 30)), p, 7),
+}
+
+
+def _data_files(p):
+    return {
+        os.path.join(d, f)
+        for d, _, files in os.walk(p)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_PUBLISHING))
+def test_every_write_is_zstd_with_v2_pages(spark, tmp_path, name):
+    p = str(tmp_path / "t")
+    _typed(spark, range(20)).write.options(**_SPARK_DEFAULT).parquet(p)
+    before = _data_files(p)
+    _PUBLISHING[name](spark, p)
+    published = sorted(_data_files(p) - before)
+    assert published
+    for f in published:
+        md = pq.ParquetFile(f).metadata
+        chunks = [
+            md.row_group(g).column(c)
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        ]
+        assert chunks, f
+        assert {c.compression for c in chunks} == {"ZSTD"}, f
+        k = [c.encodings for c in chunks if c.path_in_schema == "k"]
+        assert k and all("DELTA_BINARY_PACKED" in e for e in k), (f, k)
+
+
+_TRIP_COLS = [
+    "trip_id", "requested_at", "requested_date", "completed_at", "fare",
+    "status", "updated_at",
+]
+_TRIPS = (
+    "trip_id long, requested_at timestamp_ntz, requested_date date, "
+    "completed_at timestamp_ntz, fare double, status string, "
+    "updated_at timestamp_ntz"
+)
+_ARROW_TRIPS = pa.schema(
+    [
+        ("trip_id", pa.int64()), ("requested_at", pa.timestamp("us")),
+        ("requested_date", pa.date32()), ("completed_at", pa.timestamp("us")),
+        ("fare", pa.float64()), ("status", pa.string()),
+        ("updated_at", pa.timestamp("us")),
+    ]
+)
+# the types each reader must return, in _TRIP_COLS order
+_SPARK_TYPES = [
+    "bigint", "timestamp_ntz", "date", "timestamp_ntz", "double", "string",
+    "timestamp_ntz",
+]
+_DUCKDB_TYPES = [
+    "BIGINT", "TIMESTAMP", "DATE", "TIMESTAMP", "DOUBLE", "VARCHAR", "TIMESTAMP",
+]
+
+
+def _trip(k, fare, status="completed", version=0):
+    """One trip row; the timestamps carry microseconds, so a reader that
+    truncates them (ms, or ns read back rounded) changes the row."""
+    at = datetime.datetime(2024, 3, 1 + k % 5, 8) + datetime.timedelta(
+        minutes=k, microseconds=k * 7919 % 1_000_000
+    )
+    done = at + datetime.timedelta(minutes=20) if status == "completed" else None
+    upd = at + datetime.timedelta(hours=1 + version, microseconds=1)
+    return (k, at, at.date(), done, fare, status, upd)
+
+
+def _model(rows):
+    return pd.DataFrame(rows, columns=_TRIP_COLS, dtype=object).set_index("trip_id")
+
+
+def _model_upsert(state, rows):
+    new = _model(rows)
+    return pd.concat([state.drop(index=new.index, errors="ignore"), new])
+
+
+def _model_cdc(state, changes):
+    """The latest change per key wins (ties: op descending); deletes drop
+    the key, inserts and updates replace the row."""
+    ch = pd.DataFrame(changes, columns=[*_TRIP_COLS, "op"], dtype=object)
+    latest = ch.sort_values(["updated_at", "op"], ascending=False)
+    latest = latest.drop_duplicates("trip_id")
+    state = state.drop(index=latest["trip_id"], errors="ignore")
+    ups = latest[latest["op"] != "D"].drop(columns="op")
+    return pd.concat([state, ups.set_index("trip_id")])
+
+
+def _pyarrow_snappy_v1(spark, p, rows):
+    """Two pyarrow snappy/v1 files, the shape of a landed table."""
+    os.makedirs(p)
+    for i, part in enumerate((rows[::2], rows[1::2])):
+        t = pa.Table.from_pylist([dict(zip(_TRIP_COLS, r)) for r in part], _ARROW_TRIPS)
+        pq.write_table(
+            t, os.path.join(p, f"part-{i:05d}.parquet"),
+            compression="snappy", data_page_version="1.0",
+        )
+
+
+def _spark_snappy_v1(spark, p, rows):
+    """Two Spark files in Spark's default format."""
+    df = spark.createDataFrame(rows, _TRIPS).coalesce(2)
+    df.write.options(**_SPARK_DEFAULT).parquet(p)
+
+
+def _three_reads(spark, p):
+    """The table at ``p`` as row tuples read by Spark (through
+    ``readers.read_parquet``), pyarrow and DuckDB; each read's column
+    types are checked first."""
+    df = readers.read_parquet(spark, p).select(*_TRIP_COLS)
+    assert [f.dataType.simpleString() for f in df.schema] == _SPARK_TYPES
+    t = pq.read_table(p, columns=_TRIP_COLS)
+    assert list(t.schema.types) == list(_ARROW_TRIPS.types)
+    rel = duckdb.sql(
+        f"SELECT {', '.join(_TRIP_COLS)} FROM read_parquet('{p}/*.parquet')"
+    )
+    assert [str(ty) for ty in rel.types] == _DUCKDB_TYPES
+    return {
+        "spark": sorted(map(tuple, df.collect())),
+        "pyarrow": sorted(tuple(r[c] for c in _TRIP_COLS) for r in t.to_pylist()),
+        "duckdb": sorted(rel.fetchall()),
+    }
+
+
+@pytest.mark.parametrize("make", [_pyarrow_snappy_v1, _spark_snappy_v1])
+def test_old_format_tables_read_alike_after_each_write(spark, tmp_path, make):
+    # every write below adds or rewrites files in TABLE_FORMAT: after the
+    # append the table mixes both formats, then the MERGE and the CDC
+    # batch rewrite it; Spark, pyarrow and DuckDB read the model each time
+    p = str(tmp_path / "t")
+    base = [_trip(k, 10.0 + k, "completed" if k % 4 else "cancelled") for k in range(1, 41)]
+    make(spark, p, base)
+    state = _model(base)
+    appended = [_trip(k, 1.5 * k) for k in range(41, 46)]
+    merged = [_trip(2, 99.0, version=1), _trip(46, 4.6)]
+    changes = [
+        (*_trip(3, 30.5, version=1), "U"),
+        (*_trip(3, 31.5, "cancelled", version=2), "U"),
+        (*_trip(4, 4.0, version=1), "D"),
+        (*_trip(42, 42.5, version=1), "U"),
+        (*_trip(47, 47.0, version=1), "I"),
+    ]
+    steps = [
+        (
+            lambda: writers.write_append(spark.createDataFrame(appended, _TRIPS), p),
+            lambda s: pd.concat([s, _model(appended)]),
+        ),
+        (
+            lambda: writers.merge_upsert(
+                spark, spark.createDataFrame(merged, _TRIPS), p, ["trip_id"]
+            ),
+            lambda s: _model_upsert(s, merged),
+        ),
+        (
+            lambda: writers.apply_cdc_batch(
+                spark,
+                spark.createDataFrame(changes, f"{_TRIPS}, op string"),
+                p, ["trip_id"], "updated_at",
+            ),
+            lambda s: _model_cdc(s, changes),
+        ),
+    ]
+    for write, model_step in steps:
+        write()
+        state = model_step(state)
+        want = sorted(state.reset_index().itertuples(index=False, name=None))
+        assert _three_reads(spark, p) == {
+            "spark": want, "pyarrow": want, "duckdb": want
+        }
 
 
 def test_string_partition_values_read_back_as_written(spark, tmp_path):
@@ -826,6 +1017,19 @@ def test_only_writers_module_writes_dataframes():
     assert not found, (
         f"write tables through sources/writers.py, not directly: {found}"
     )
+
+
+def test_only_the_writer_builder_starts_a_write():
+    # inside the write seam, every write starts from _writer, so none
+    # falls back to Spark's default file format
+    with open(os.path.join(_PKG, _WRITE_SEAM), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    (builder,) = [
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_writer"
+    ]
+    hits = _direct_writes(tree)
+    outside = [h for h in hits if not builder.lineno <= h[0] <= builder.end_lineno]
+    assert hits and not outside, f"start writes from writers._writer: {outside}"
 
 
 def test_only_write_overwrite_chooses_a_layout():
